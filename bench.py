@@ -154,12 +154,11 @@ def _wait_for_quiet() -> bool:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # round 11 (VERDICT r10 #1): the artifact serving mode is part of
-    # what a bench number MEANS — record it, and never let a non-warm
-    # run clobber the canonical warm artifact (file naming below)
+    # the artifact serving mode is part of what a bench number MEANS —
+    # record it, and never let an off-mode run clobber the canonical
+    # warm artifact (file naming below)
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         artifacts_mode,
-        reset_cold_warehouse,
     )
 
     art_mode = artifacts_mode()
@@ -236,10 +235,6 @@ def main() -> None:
             time.sleep(5)
 
     def run_once(name: str) -> dict:
-        # cold mode: each query pays its own full artifact build — wipe
-        # the throwaway warehouse before the clock starts (no-op in
-        # warm/off modes)
-        reset_cold_warehouse()
         c0, o0 = _read_cpu(), _subtree_ticks()
         t0 = time.time()
         queries[name](spark, sf_dir).count()
@@ -522,7 +517,7 @@ def main() -> None:
         "env": env,
     }
     # only the canonical sf0.1 WARM run owns BENCH_FULL_latest.json — a
-    # smoke run at another SF, or an off/cold artifact-mode run, must
+    # smoke run at another SF, or an off artifact-mode run, must
     # not clobber the committed artifact (it happened once; see git
     # history)
     default_name = (

@@ -1,137 +1,147 @@
-"""Session-spanning shared build artifacts (round 8, VERDICT r7 #2+#3).
+"""The artifact warehouse: derived tables that many queries share
+(chunk embeddings, the token index, the co-purchase graph, ANN models,
+dedup clusters, ...) are built once per input content and then served
+as parquet reads.
 
-The retrieval family (late-interaction MaxSim, hybrid/RRF fusion,
-semantic chunk boundaries, ...) re-derived the chunk + embedding
-tables per query (~10 s cold at sf0.1), and the dedup family re-ran
-the SimHash -> connected-components cluster chain per consumer. This
-module gives both ONE durable, content-keyed home:
+Modes (``SPARK_GRAFT_ARTIFACTS``):
 
-- `corpus_warehouse(spark, sf_dir)` — a per-corpus directory under
-  $SPARK_GRAFT_WAREHOUSE (default: <repo>/spark-warehouse/artifacts),
-  keyed by a content signature of the documents table (row count +
-  order-insensitive xxhash64 over (doc_id, text)). A CHANGED corpus
-  produces a different key, so stale artifacts are never served — the
-  invalidation story is structural, not TTL-based.
-- `ensure_chunk_embeddings(spark, sf_dir)` — (chunks_df, emb_df) read
-  from the durable parquet tables, built on first touch under the
-  BM25 crash discipline (staged dirs + one atomic manifest replace).
-- `dedup_index_for(spark, sf_dir)` — the durable dedup-cluster index
-  (plans/dedup_index.py) ensured at the corpus warehouse.
+- ``warm`` (default): serve each artifact from the durable warehouse,
+  building it on first touch.
+- ``off``: derive every artifact inline. Nothing is read from or
+  written to the warehouse and no content signature is computed; each
+  table is ``localCheckpoint(eager=False)``'d where the warm build has
+  its write/read boundary, so a run still computes it once.
 
-Scale: at 100 TB these are exactly the materialized intermediate
-tables a production lakehouse maintains (chunk store, embedding store,
-dedup-cluster table); queries become partition-pruned reads of
-committed parquet instead of re-deriving corpus-sized intermediates.
+Both modes compute the same tables. A cold build is a warm run against
+an empty warehouse: point ``SPARK_GRAFT_WAREHOUSE`` at a fresh
+directory.
 
-The in-process signature cache is keyed by (sf_dir, mtime of the
-documents table dir) so a rewritten corpus under the same path
-re-signatures, while the steady-state cost per query is zero.
+Layout: the warehouse root (``$SPARK_GRAFT_WAREHOUSE``, default
+``<repo>/spark-warehouse/artifacts``) holds one directory per input
+signature: ``corpus-<key>`` (documents), ``graph-<key>`` (lineitem),
+``vectors-<key>`` (embeddings) and ``linkage-<key>`` (customer). A key
+is the row count plus an order-insensitive xxhash64 sum over the
+columns the artifacts consume, so a changed input maps to a new
+directory and stale tables are never served. Inside it, an artifact is
+a directory with one ``<table>/`` per table plus a ``MANIFEST.json``.
+The manifest is written last, in one atomic replace
+(plans/manifest.py), so a crashed build stays invisible and its retry
+overwrites the staged tables.
+
+Adding an artifact is one `materialize` call: a root (a thunk, so off
+mode never resolves it) and ``{table: builder}``, where each builder
+receives the tables built before it.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from commercial_rfp_data_pipeline_spark.io import load_table
 from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-    _bm25_commit as _commit,
-)
-from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-    _bm25_manifest as _manifest,
-)
-from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
     build_chunks,
+    build_embedding_parts,
     build_embeddings,
 )
+from commercial_rfp_data_pipeline_spark.plans.manifest import (
+    commit_manifest,
+    read_manifest,
+)
+
+Tables = dict[str, DataFrame]
 
 _SIG_CACHE: dict[tuple[str, float], str] = {}
 
 
 def artifacts_mode() -> str:
-    """SPARK_GRAFT_ARTIFACTS=warm|cold|off (round 11, VERDICT r10 #1 —
-    the cold-path bench contract that makes artifact cost measurable):
-
-    - ``warm`` (default): serve from the durable warehouse, building
-      on first touch — the production lakehouse posture.
-    - ``cold``: the warehouse root is redirected to a throwaway
-      per-process directory (see ``warehouse_root``), so every
-      artifact is BUILT inside the timed region, then served from the
-      fresh parquet. ``reset_cold_warehouse()`` wipes it between
-      measurements.
-    - ``off``: every ``ensure_*`` derives its tables INLINE — no
-      warehouse read, no write; the returned DataFrames carry the full
-      derivation lineage (intermediates are lazily localCheckpoint'ed
-      exactly where the warm build has a write->read boundary, so
-      within-run compute-once is preserved but nothing persists).
-
-    Every mode computes the identical tables — the artifact==inline
-    equality tests and the oracle gate hold in all three."""
+    """``SPARK_GRAFT_ARTIFACTS``: ``warm`` (default) or ``off``; see the
+    module docstring."""
     m = (
         os.environ.get("SPARK_GRAFT_ARTIFACTS", "warm").strip().lower()
         or "warm"
     )
-    if m not in ("warm", "cold", "off"):
-        raise ValueError(
-            f"SPARK_GRAFT_ARTIFACTS must be warm|cold|off, got {m!r}"
-        )
+    if m not in ("warm", "off"):
+        raise ValueError(f"SPARK_GRAFT_ARTIFACTS must be warm|off, got {m!r}")
     return m
 
 
-def _lazy_ckpt(df: DataFrame) -> DataFrame:
-    """Off-mode stand-in for an artifact's write->read boundary:
-    compute-once within the run, nothing persisted."""
-    return df.localCheckpoint(eager=False)
+def materialize(
+    spark: SparkSession,
+    root: Callable[[], str],
+    builders: dict[str, Callable[[Tables], DataFrame]],
+    manifest: Callable[[Tables], dict] | None = None,
+    stat: str | None = None,
+    serve: Callable[[str, dict], tuple[DataFrame, ...]] | None = None,
+    partition_by: dict[str, str] | None = None,
+) -> tuple[DataFrame, ...] | int:
+    """Ensure the artifact at ``root()`` and return its tables, in
+    ``builders`` order.
+
+    Builders run in order; each receives the tables built before it.
+    Warm mode writes each table to ``root/<table>`` (partitioned by
+    ``partition_by[table]`` when given) and reads it back, then
+    publishes them all with one manifest commit that also records
+    ``manifest(tables)``. An artifact whose manifest is already
+    committed is served by reading its tables, or by
+    ``serve(root, manifest)`` for a layout the manifest resolves. Off
+    mode checkpoints each table lazily and never calls ``root``.
+
+    With ``stat``, return that entry of ``manifest(tables)`` instead:
+    the committed literal when there is one, otherwise computed over
+    the tables (off mode, or a manifest written before the entry
+    existed)."""
+    tables: Tables = {}
+    if artifacts_mode() == "off":
+        for name, build in builders.items():
+            tables[name] = build(tables).localCheckpoint(eager=False)
+        return manifest(tables)[stat] if stat else tuple(tables.values())
+    path = root()
+    m = read_manifest(path)
+    if m is None:
+        for name, build in builders.items():
+            writer = build(tables).write.mode("overwrite")
+            if partition_by and name in partition_by:
+                writer = writer.partitionBy(partition_by[name])
+            writer.parquet(os.path.join(path, name))
+            tables[name] = spark.read.parquet(os.path.join(path, name))
+        m = {"tables": list(builders), **(manifest(tables) if manifest else {})}
+        commit_manifest(path, m)
+    if stat and stat in m:
+        return int(m[stat])
+    if serve:
+        return serve(path, m)
+    tables = tables or {
+        name: spark.read.parquet(os.path.join(path, name)) for name in builders
+    }
+    return manifest(tables)[stat] if stat else tuple(tables.values())
 
 
-def reset_cold_warehouse() -> None:
-    """Wipe the throwaway cold-mode warehouse (between measured
-    queries, so each one pays its own full build)."""
-    import shutil
-
-    if artifacts_mode() == "cold":
-        shutil.rmtree(_cold_root(), ignore_errors=True)
-
-
-def _cold_root() -> str:
-    import tempfile
-
-    return os.environ.get(
-        "SPARK_GRAFT_COLD_DIR",
-        os.path.join(
-            tempfile.gettempdir(), f"spark_graft_cold_{os.getpid()}"
-        ),
+def _table_key(
+    spark: SparkSession, sf_dir: str, table: str, cols: list[str]
+) -> str:
+    """Content signature of the ``cols`` an artifact consumes from
+    ``table``: row count + order-insensitive xxhash64 sum. One narrow
+    scan on first touch per (path, mtime), cached in-process after."""
+    ck = (
+        os.path.join(sf_dir, f"__{table}__" + ",".join(cols)),
+        _table_mtime(sf_dir, table),
     )
-
-
-def _docs_mtime(sf_dir: str) -> float:
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        return os.path.getmtime(p)
-    except OSError:
-        return 0.0
-
-
-def corpus_key(spark: SparkSession, sf_dir: str) -> str:
-    """Content signature of the documents table: one narrow scan on
-    first touch per (path, mtime), cached in-process afterwards."""
-    ck = (sf_dir, _docs_mtime(sf_dir))
     hit = _SIG_CACHE.get(ck)
     if hit is not None:
         return hit
     # decimal(38,0) accumulation: a long sum of xxhash64 values
     # overflows (a hard error under ANSI mode, silent wrap otherwise)
     sig = (
-        load_table(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, table)
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64("doc_id", "text").cast("decimal(38,0)")
-            ).alias("h"),
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
         )
         .collect()[0]
     )
@@ -140,11 +150,57 @@ def corpus_key(spark: SparkSession, sf_dir: str) -> str:
     return key
 
 
+def _table_mtime(sf_dir: str, name: str) -> float:
+    p = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        return os.path.getmtime(p)
+    except OSError:
+        return 0.0
+
+
+def corpus_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the documents table (doc_id, text)."""
+    return _table_key(spark, sf_dir, "documents", ["doc_id", "text"])
+
+
+def lineitem_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the lineitem columns the graph family consumes."""
+    return _table_key(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
+
+
+def orders_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the orders columns the bipartite artifact consumes:
+    the edge list joins orders, so an orders-only change (a custkey
+    remap, a partial regeneration) must re-key it even when lineitem is
+    unchanged."""
+    return _table_key(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
+
+
+def part_nodes_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the part column the LPA label artifact takes its
+    node set from: a parts-only change must re-key the labels even when
+    lineitem, and so the graph warehouse, is unchanged."""
+    return _table_key(spark, sf_dir, "part", ["p_partkey"])
+
+
+def customer_linkage_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the customer columns the fuzzy-linkage family
+    consumes (key, name, nation block)."""
+    return _table_key(
+        spark, sf_dir, "customer", ["c_custkey", "c_name", "c_nationkey"]
+    )
+
+
+def embeddings_key(spark: SparkSession, sf_dir: str) -> str:
+    """Signature of the embeddings table the ANN-model artifacts
+    consume (vec_id + vector + label; label participates because the
+    filtered-search artifacts store it in the cell layout)."""
+    return _table_key(
+        spark, sf_dir, "embeddings", ["vec_id", "embedding", "label"]
+    )
+
+
 def warehouse_root() -> str:
-    if artifacts_mode() == "cold":
-        root = _cold_root()
-        os.makedirs(root, exist_ok=True)
-        return root
     env = os.environ.get("SPARK_GRAFT_WAREHOUSE")
     if env:
         return env
@@ -176,214 +232,153 @@ def corpus_warehouse(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def ensure_chunk_embeddings(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Durable (chunks, parts, embeddings) for the corpus at
-    ``sf_dir`` — built once, then served as parquet reads. ``parts``
-    is the pre-normalization (chunk_id, _arr, _norm) form consumers
-    that reshape the vector need; ``embeddings`` is the normalized
-    (chunk_id, embedding) table the cosine kernels read. Same crash
-    discipline as BM25: all tables stage, then ONE manifest replace
-    publishes them; a crashed build leaves invisible dirs that the
-    retry overwrites."""
-    if artifacts_mode() == "off":
-        from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-            build_embedding_parts,
-        )
-
-        built = _lazy_ckpt(build_chunks(spark, sf_dir))
-        return (
-            built,
-            _lazy_ckpt(build_embedding_parts(built)),
-            _lazy_ckpt(build_embeddings(built)),
-        )
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "chunk_emb")
-    m = _manifest(root)
-    chunks_path = os.path.join(root, "chunks")
-    parts_path = os.path.join(root, "emb_parts")
-    emb_path = os.path.join(root, "embeddings")
-    if m is None:
-        from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-            build_embedding_parts,
-        )
-
-        chunks = build_chunks(spark, sf_dir)
-        chunks.write.mode("overwrite").parquet(chunks_path)
-        built = spark.read.parquet(chunks_path)
-        build_embedding_parts(built).write.mode("overwrite").parquet(
-            parts_path
-        )
-        build_embeddings(built).write.mode("overwrite").parquet(emb_path)
-        _commit(root, {"tables": ["chunks", "emb_parts", "embeddings"]})
-    return (
-        spark.read.parquet(chunks_path),
-        spark.read.parquet(parts_path),
-        spark.read.parquet(emb_path),
-    )
-
-
-def ensure_token_index(
-    spark: SparkSession, sf_dir: str, k: int = 3, emb_dim: int = 8
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Durable token-level retrieval artifacts for the late-interaction
-    family: (toks, df, tokemb) where toks = distinct (doc_id, tok)
-    word-k-gram postings, df = per-token document frequency, tokemb =
-    one deterministic md5-byte embedding per DISTINCT token. These are
-    exactly the tables a ColBERT-style serving stack materializes once
-    per corpus (the token index + token-vector store); per-query work
-    is then candidate joins + MaxSim over candidates only."""
-    from commercial_rfp_data_pipeline_spark.operators.textops import (
-        shingles,
-    )
-
-    if artifacts_mode() == "off":
-        docs = load_table(spark, sf_dir, "documents")
-        toks = _lazy_ckpt(
-            shingles(docs, k=k)
-            .select("doc_id", F.col("sh").alias("tok"))
-            .distinct()
-        )
-        dft = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        m = F.md5(F.col("tok"))
-        emb = F.array(
-            *[
-                F.conv(F.substring(m, 2 * j + 1, 2), 16, 10).cast(
-                    "double"
-                )
-                - F.lit(127.5)
-                for j in range(emb_dim)
-            ]
-        )
-        tokemb = toks.select("tok").distinct().select(
-            "tok", emb.alias("emb")
-        )
-        return toks, _lazy_ckpt(dft), _lazy_ckpt(tokemb)
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, f"token_index_k{k}_d{emb_dim}")
-    toks_path = os.path.join(root, "toks")
-    df_path = os.path.join(root, "df")
-    emb_path = os.path.join(root, "tokemb")
-    if _manifest(root) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = (
-            shingles(docs, k=k)
-            .select("doc_id", F.col("sh").alias("tok"))
-            .distinct()
-        )
-        toks.write.mode("overwrite").parquet(toks_path)
-        built = spark.read.parquet(toks_path)
-        built.groupBy("tok").agg(
-            F.count(F.lit(1)).alias("df")
-        ).write.mode("overwrite").parquet(df_path)
-        m = F.md5(F.col("tok"))
-        emb = F.array(
-            *[
-                F.conv(F.substring(m, 2 * j + 1, 2), 16, 10).cast(
-                    "double"
-                )
-                - F.lit(127.5)
-                for j in range(emb_dim)
-            ]
-        )
-        built.select("tok").distinct().select(
-            "tok", emb.alias("emb")
-        ).write.mode("overwrite").parquet(emb_path)
-        n_docs = built.select("doc_id").distinct().count()
-        _commit(
-            root,
-            {"tables": ["toks", "df", "tokemb"], "k": k, "n_docs": n_docs},
-        )
-    return (
-        spark.read.parquet(toks_path),
-        spark.read.parquet(df_path),
-        spark.read.parquet(emb_path),
-    )
-
-
-def token_index_n_docs(spark: SparkSession, sf_dir: str, k: int = 3, emb_dim: int = 8) -> int:
-    """Corpus doc count (docs with >= 1 token) from the token-index
-    manifest — a literal instead of a per-query countDistinct scan.
-    Off mode has no manifest: count the inline postings (one honest
-    extra job inside the timed region)."""
-    if artifacts_mode() == "off":
-        toks, _, _ = ensure_token_index(spark, sf_dir, k=k, emb_dim=emb_dim)
-        return toks.select("doc_id").distinct().count()
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, f"token_index_k{k}_d{emb_dim}")
-    m = _manifest(root)
-    if m is None or "n_docs" not in m:
-        # warm/cold warehouse without the index yet: build it (the
-        # same first-touch discipline every ensure_* follows)
-        ensure_token_index(spark, sf_dir, k=k, emb_dim=emb_dim)
-        m = _manifest(root)
-    if m is None or "n_docs" not in m:
-        raise ValueError("token index missing — run ensure_token_index")
-    return int(m["n_docs"])
-
-
-def _table_key(
-    spark: SparkSession, sf_dir: str, table: str, cols: list[str]
-) -> str:
-    """Content signature of the ``cols`` an artifact consumes from
-    ``table``: row count + order-insensitive xxhash64 sum, exactly the
-    `corpus_key` discipline. A changed table produces a new key, so
-    stale artifacts are never served; cached per (path, mtime)."""
-    ck = (
-        os.path.join(sf_dir, f"__{table}__" + ",".join(cols)),
-        _table_mtime(sf_dir, table),
-    )
-    hit = _SIG_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    sig = (
-        load_table(spark, sf_dir, table)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
-        )
-        .collect()[0]
-    )
-    key = hashlib.md5(f"{sig['n']}:{sig['h']}".encode()).hexdigest()[:16]
-    _SIG_CACHE[ck] = key
-    return key
-
-
-def lineitem_key(spark: SparkSession, sf_dir: str) -> str:
-    """Signature of the lineitem columns the graph family consumes."""
-    return _table_key(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
-
-
-def orders_key(spark: SparkSession, sf_dir: str) -> str:
-    """Signature of the orders columns the bipartite artifact consumes
-    (ADVICE r9: the bipartite edge list joins orders, so an
-    orders-only change — custkey remap, partial regeneration — must
-    re-key it even when lineitem is unchanged)."""
-    return _table_key(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
-
-
-def _table_mtime(sf_dir: str, name: str) -> float:
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        return os.path.getmtime(p)
-    except OSError:
-        return 0.0
-
-
 def graph_warehouse(spark: SparkSession, sf_dir: str) -> str:
     return os.path.join(
         warehouse_root(), f"graph-{lineitem_key(spark, sf_dir)}"
     )
 
 
+def vector_warehouse(spark: SparkSession, sf_dir: str) -> str:
+    return os.path.join(
+        warehouse_root(), f"vectors-{embeddings_key(spark, sf_dir)}"
+    )
+
+
+def ensure_chunk_embeddings(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(chunks, parts, embeddings) for the corpus at ``sf_dir``.
+    ``parts`` is the pre-normalization (chunk_id, _arr, _norm) form for
+    consumers that reshape the vector; ``embeddings`` is the normalized
+    (chunk_id, embedding) table the cosine kernels read."""
+    return materialize(
+        spark,
+        lambda: os.path.join(corpus_warehouse(spark, sf_dir), "chunk_emb"),
+        {
+            "chunks": lambda t: build_chunks(spark, sf_dir),
+            "emb_parts": lambda t: build_embedding_parts(t["chunks"]),
+            "embeddings": lambda t: build_embeddings(t["chunks"]),
+        },
+    )
+
+
+def _token_index(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int,
+    emb_dim: int,
+    stat: str | None = None,
+):
+    from commercial_rfp_data_pipeline_spark.operators.textops import (
+        shingles,
+    )
+
+    def tokemb(t: Tables) -> DataFrame:
+        m = F.md5(F.col("tok"))
+        emb = F.array(
+            *[
+                F.conv(F.substring(m, 2 * j + 1, 2), 16, 10).cast("double")
+                - F.lit(127.5)
+                for j in range(emb_dim)
+            ]
+        )
+        return t["toks"].select("tok").distinct().select("tok", emb.alias("emb"))
+
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            corpus_warehouse(spark, sf_dir), f"token_index_k{k}_d{emb_dim}"
+        ),
+        {
+            "toks": lambda t: shingles(
+                load_table(spark, sf_dir, "documents"), k=k
+            )
+            .select("doc_id", F.col("sh").alias("tok"))
+            .distinct(),
+            "df": lambda t: t["toks"]
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df")),
+            "tokemb": tokemb,
+        },
+        manifest=lambda t: {
+            "n_docs": t["toks"].select("doc_id").distinct().count()
+        },
+        stat=stat,
+    )
+
+
+def ensure_token_index(
+    spark: SparkSession, sf_dir: str, k: int = 3, emb_dim: int = 8
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Token-level retrieval artifacts for the late-interaction family:
+    (toks, df, tokemb) where toks = distinct (doc_id, tok) word-k-gram
+    postings, df = per-token document frequency, tokemb = one
+    deterministic md5-byte embedding per DISTINCT token. These are the
+    tables a ColBERT-style serving stack materializes once per corpus
+    (the token index + token-vector store); per-query work is then
+    candidate joins + MaxSim over candidates only."""
+    return _token_index(spark, sf_dir, k, emb_dim)
+
+
+def token_index_n_docs(
+    spark: SparkSession, sf_dir: str, k: int = 3, emb_dim: int = 8
+) -> int:
+    """Corpus doc count (docs with >= 1 token) from the token-index
+    manifest: a literal instead of a per-query countDistinct scan."""
+    return _token_index(spark, sf_dir, k, emb_dim, stat="n_docs")
+
+
+def _wedges(li: DataFrame) -> DataFrame:
+    """Symmetric co-purchase edges (src, dst, w, w_dist) of a lineitem
+    frame: one self-join on the order key, pre-collapsed through a
+    multiplicity aggregate so the join runs on the distinct
+    (order, part) table and w = sum(m_a * m_b) is the raw-pair count."""
+    lp = li.groupBy("l_orderkey", "l_partkey").agg(
+        F.count(F.lit(1)).alias("m")
+    )
+    a, b = lp.alias("a"), lp.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+        .agg(
+            F.sum(F.col("a.m") * F.col("b.m")).alias("w"),
+            F.count(F.lit(1)).alias("w_dist"),
+        )
+    )
+
+
+def _copurchase(
+    spark: SparkSession,
+    sf_dir: str,
+    wedges: Callable[[Tables], DataFrame] | None = None,
+    stat: str | None = None,
+):
+    return materialize(
+        spark,
+        lambda: os.path.join(graph_warehouse(spark, sf_dir), "copurchase"),
+        {
+            "wedges": wedges
+            or (lambda t: _wedges(load_table(spark, sf_dir, "lineitem"))),
+            "degrees": lambda t: t["wedges"]
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("d")),
+        },
+        manifest=lambda t: {"n_edges": t["wedges"].count()},
+        stat=stat,
+    )
+
+
 def ensure_copurchase_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable co-purchase graph for the corpus at ``sf_dir`` —
-    (wedges, degrees), built once, then served as parquet reads
-    (VERDICT r8 next-round #1: the 11-query graph family rebuilt the
-    identical lineitem self-join per query).
+    """Co-purchase graph for the corpus at ``sf_dir``: (wedges, degrees).
 
     ``wedges``: the SYMMETRIC weighted edge list (src, dst, w, w_dist)
     where ``w`` = raw co-occurrence multiplicity (every lineitem pair
@@ -397,67 +392,18 @@ def ensure_copurchase_graph(
     - weighted edges           = wedges.select(src, dst, w)
     - tie-strength >= t edges  = wedges.filter(w_dist >= t)
 
-    ``degrees``: (id, d) distinct-neighbor degree — a groupBy of the
-    symmetric wedges, stored so the triangle orientation and
-    link-prediction scoring read it instead of recounting.
+    ``degrees``: (id, d) distinct-neighbor degree, stored so the
+    triangle orientation and link-prediction scoring read it instead
+    of recounting."""
+    return _copurchase(spark, sf_dir)
 
-    Build cost: ONE lineitem self-join (fanout bounded by
-    items-per-order squared) pre-collapsed through a multiplicity
-    aggregate, so the join runs on the distinct (order, part) table and
-    w = sum(m_a * m_b) reproduces the raw-pair count exactly. Same
-    crash discipline as the chunk/BM25 artifacts: tables stage, one
-    atomic manifest publish. At 100 TB this is the materialized edge
-    table a production graph stack maintains; per-query cost becomes a
-    partition-pruned parquet read."""
-    def _build_wedges() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        lp = li.groupBy("l_orderkey", "l_partkey").agg(
-            F.count(F.lit(1)).alias("m")
-        )
-        a, b = lp.alias("a"), lp.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-            )
-            .groupBy(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-            .agg(
-                F.sum(F.col("a.m") * F.col("b.m")).alias("w"),
-                F.count(F.lit(1)).alias("w_dist"),
-            )
-        )
 
-    if artifacts_mode() == "off":
-        wedges = _lazy_ckpt(_build_wedges())
-        degrees = wedges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("d")
-        )
-        return wedges, _lazy_ckpt(degrees)
-
-    wh = graph_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "copurchase")
-    edges_path = os.path.join(root, "wedges")
-    deg_path = os.path.join(root, "degrees")
-    if _manifest(root) is None:
-        _build_wedges().write.mode("overwrite").parquet(edges_path)
-        built = spark.read.parquet(edges_path)
-        (
-            built.groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("d"))
-            .write.mode("overwrite")
-            .parquet(deg_path)
-        )
-        _commit(
-            root,
-            {"tables": ["wedges", "degrees"], "n_edges": built.count()},
-        )
-    return spark.read.parquet(edges_path), spark.read.parquet(deg_path)
+def copurchase_n_edges(spark: SparkSession, sf_dir: str) -> int:
+    """Directed symmetric edge count from the co-purchase manifest (a
+    literal, not a scan). Consumers use it to pick a physical strategy
+    (e.g. broadcast vs partitioned closure join in the triangle count)
+    without an extra job."""
+    return _copurchase(spark, sf_dir, stat="n_edges")
 
 
 def append_to_copurchase_graph(
@@ -466,225 +412,133 @@ def append_to_copurchase_graph(
     delta_li: DataFrame,
     out_sf_dir: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """Incrementally maintain the co-purchase graph artifact (round
-    10): given the PREVIOUS corpus snapshot at ``base_sf_dir`` (whose
-    artifact exists or is built here) and the ingest batch
+    """Incrementally maintain the co-purchase graph: given the PREVIOUS
+    corpus snapshot at ``base_sf_dir`` and the ingest batch
     ``delta_li`` of NEW lineitem rows, publish the artifact for the
-    UPDATED corpus at ``out_sf_dir`` (= base + delta, as ingest laid
-    it down) by merging the delta's edges into the stored edge table —
-    producing byte-equivalent semantics to a full rebuild, registered
-    under the SAME content key `ensure_copurchase_graph` would compute,
-    so every graph-family consumer transparently serves the appended
-    artifact with zero code changes.
+    UPDATED corpus at ``out_sf_dir`` (= base + delta, as ingest laid it
+    down) by merging the delta's edges into the stored edge table. The
+    result equals a full rebuild and is registered under the content
+    key `ensure_copurchase_graph` computes for ``out_sf_dir``, so every
+    graph consumer serves it unchanged.
 
-    Precondition (the same whole-batch discipline the dedup index
-    documents): the delta consists of WHOLE orders — co-purchase pairs
-    share an l_orderkey, so when an order's lineitems land in one
-    batch, no edge spans base and delta and the merge is exact:
-    merged w / w_dist = base ⊎ delta summed per (src, dst). An order
-    split across batches would silently undercount its cross-batch
-    pairs; `validate=` is deliberately absent because checking
-    disjointness costs the base-table scan this function exists to
-    avoid — ingest owns that invariant (it already owns atomic
-    file-level appends).
+    Precondition (the dedup index's whole-batch discipline): the delta
+    consists of WHOLE orders. Co-purchase pairs share an l_orderkey, so
+    when an order's lineitems land in one batch no edge spans base and
+    delta and the merge is exact: merged w / w_dist = base ⊎ delta
+    summed per (src, dst). An order split across batches would
+    undercount its cross-batch pairs; checking disjointness would cost
+    the base-table scan this function exists to avoid, so ingest owns
+    that invariant.
 
-    Scale: the delta self-join runs on the DELTA only (fanout bounded
-    by items-per-order squared, independent of corpus size); the merge
-    is one full-outer equi-join on (src, dst) — O(|E| + |delta edges|)
-    over the stored OUTPUT table, never the accumulated input. At
-    100 TB that is the difference between touching yesterday's edge
-    table and re-shuffling the whole lineitem history; a bucketed
-    edge layout (the dedup index's cluster-bucket scheme) would
-    further confine the rewrite to touched buckets.
+    Scale: the delta self-join runs on the DELTA only; the merge is one
+    full-outer equi-join on (src, dst) over the stored OUTPUT table,
+    never the accumulated input.
 
-    Returns the served (wedges, degrees) for ``out_sf_dir``. If the
-    target artifact already exists (same content key), it is served
-    as-is; if the base has no artifact yet, it is built first."""
-    base_w, _ = ensure_copurchase_graph(spark, base_sf_dir)
+    Returns the served (wedges, degrees) for ``out_sf_dir``. An
+    existing target artifact is served as-is; the base artifact is
+    ensured (built if absent) only when the target is built."""
 
-    wh = graph_warehouse(spark, out_sf_dir)
-    root = os.path.join(wh, "copurchase")
-    edges_path = os.path.join(root, "wedges")
-    deg_path = os.path.join(root, "degrees")
-    if _manifest(root) is None:
-        lp = (
-            delta_li.select("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey", "l_partkey")
-            .agg(F.count(F.lit(1)).alias("m"))
+    def merged(t: Tables) -> DataFrame:
+        base = ensure_copurchase_graph(spark, base_sf_dir)[0].alias("base")
+        d = _wedges(delta_li).alias("d")
+        return base.join(d, ["src", "dst"], "full_outer").select(
+            "src",
+            "dst",
+            (
+                F.coalesce(F.col("base.w"), F.lit(0))
+                + F.coalesce(F.col("d.w"), F.lit(0))
+            ).alias("w"),
+            (
+                F.coalesce(F.col("base.w_dist"), F.lit(0))
+                + F.coalesce(F.col("d.w_dist"), F.lit(0))
+            ).alias("w_dist"),
         )
-        a, b = lp.alias("a"), lp.alias("b")
-        delta_edges = (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-            )
-            .groupBy(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-            .agg(
-                F.sum(F.col("a.m") * F.col("b.m")).alias("w"),
-                F.count(F.lit(1)).alias("w_dist"),
-            )
-        )
-        bd = base_w.alias("base")
-        dd = delta_edges.alias("d")
-        merged = (
-            bd.join(dd, ["src", "dst"], "full_outer")
-            .select(
-                "src",
-                "dst",
-                (
-                    F.coalesce(F.col("base.w"), F.lit(0))
-                    + F.coalesce(F.col("d.w"), F.lit(0))
-                ).alias("w"),
-                (
-                    F.coalesce(F.col("base.w_dist"), F.lit(0))
-                    + F.coalesce(F.col("d.w_dist"), F.lit(0))
-                ).alias("w_dist"),
-            )
-        )
-        merged.write.mode("overwrite").parquet(edges_path)
-        built = spark.read.parquet(edges_path)
-        (
-            built.groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("d"))
-            .write.mode("overwrite")
-            .parquet(deg_path)
-        )
-        _commit(
-            root,
-            {
-                "tables": ["wedges", "degrees"],
-                "n_edges": built.count(),
-                "appended_from": graph_warehouse(spark, base_sf_dir),
-            },
-        )
-    return spark.read.parquet(edges_path), spark.read.parquet(deg_path)
 
-
-def copurchase_n_edges(spark: SparkSession, sf_dir: str) -> int:
-    """Directed symmetric edge count from the co-purchase manifest (a
-    literal, not a scan); falls back to one parquet count for
-    manifests written before the key existed. Consumers use it to pick
-    a physical strategy (e.g. broadcast vs partitioned closure join in
-    the triangle count) without an extra job."""
-    if artifacts_mode() != "off":
-        wh = graph_warehouse(spark, sf_dir)
-        m = _manifest(os.path.join(wh, "copurchase"))
-        if m is not None and "n_edges" in m:
-            return int(m["n_edges"])
-    edges, _ = ensure_copurchase_graph(spark, sf_dir)
-    return edges.count()
-
-
-def part_nodes_key(spark: SparkSession, sf_dir: str) -> str:
-    """Signature of the part column the LPA label artifact consumes
-    for its node set: a parts-only change (keyspace growth, partial
-    regeneration) must re-key the labels even when lineitem — and
-    therefore the graph warehouse — is unchanged (the ADVICE r9
-    bipartite/orders lesson applied to nodes)."""
-    return _table_key(spark, sf_dir, "part", ["p_partkey"])
+    return _copurchase(spark, out_sf_dir, merged)
 
 
 def ensure_lpa_labels(
     spark: SparkSession, sf_dir: str, n_iters: int = 2
 ) -> DataFrame:
-    """Durable LPA community-label table (id, community) over the
-    co-purchase graph — the maintained community assignment a
-    production graph stack keeps next to its edge table. Two
-    registered queries derive from the identical 2-round propagation
-    (`label_propagation_communities` publishes it with sizes,
-    `community_modularity` scores it), so the label table is built
-    once per (lineitem, part) content signature and both serve from
-    parquet reads. Oracles still state the full unrolled LPA CTE
-    chain, so every green verify proves artifact == inline. Same
-    crash discipline as every artifact: write, then one atomic
-    manifest publish."""
+    """LPA community-label table (id, community) over the co-purchase
+    graph — the maintained community assignment a production graph
+    stack keeps next to its edge table. `label_propagation_communities`
+    and `community_modularity` derive from the identical 2-round
+    propagation, so it is built once per (lineitem, part) content
+    signature. Oracles still state the full unrolled LPA CTE chain, so
+    every green verify proves artifact == inline."""
     from commercial_rfp_data_pipeline_spark.operators.graph import (
         label_propagation,
     )
 
-    def _build() -> DataFrame:
-        wedges, _ = ensure_copurchase_graph(spark, sf_dir)
-        nodes = load_table(spark, sf_dir, "part").select(
-            F.col("p_partkey").alias("id")
-        )
-        return label_propagation(
-            nodes,
-            wedges.select("src", "dst"),
-            n_iters=n_iters,
-            n_edges=copurchase_n_edges(spark, sf_dir),
-        )
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            graph_warehouse(spark, sf_dir),
+            f"lpa{n_iters}-{part_nodes_key(spark, sf_dir)}",
+        ),
+        {
+            "labels": lambda t: label_propagation(
+                load_table(spark, sf_dir, "part").select(
+                    F.col("p_partkey").alias("id")
+                ),
+                ensure_copurchase_graph(spark, sf_dir)[0].select("src", "dst"),
+                n_iters=n_iters,
+                n_edges=copurchase_n_edges(spark, sf_dir),
+            )
+        },
+    )[0]
 
-    if artifacts_mode() == "off":
-        return _lazy_ckpt(_build())
-    wh = graph_warehouse(spark, sf_dir)
-    root = os.path.join(
-        wh, f"lpa{n_iters}-{part_nodes_key(spark, sf_dir)}"
+
+def _bipartite_edges(orders: DataFrame, li: DataFrame) -> DataFrame:
+    """DISTINCT customer->part purchase edges (src, dst) of an orders ⨝
+    lineitem pair of frames."""
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("src"), F.col("l_partkey").alias("dst"))
+        .distinct()
     )
-    path = os.path.join(root, "labels")
-    if _manifest(root) is None:
-        _build().write.mode("overwrite").parquet(path)
-        _commit(root, {"tables": ["labels"], "n_iters": n_iters})
-    return spark.read.parquet(path)
+
+
+def _bipartite(
+    spark: SparkSession,
+    sf_dir: str,
+    edges: Callable[[Tables], DataFrame] | None = None,
+    stat: str | None = None,
+):
+    # keyed by BOTH inputs: the warehouse dir carries the lineitem key
+    # and the artifact dir the orders key
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            graph_warehouse(spark, sf_dir),
+            f"bipartite-{orders_key(spark, sf_dir)}",
+        ),
+        {
+            "edges": edges
+            or (
+                lambda t: _bipartite_edges(
+                    load_table(spark, sf_dir, "orders"),
+                    load_table(spark, sf_dir, "lineitem"),
+                )
+            )
+        },
+        manifest=lambda t: {"n_edges": t["edges"].count()},
+        stat=stat,
+    )
 
 
 def ensure_purchase_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable DISTINCT customer->part purchase edge list (the HITS
-    bipartite graph): one orders ⨝ lineitem join + distinct,
-    materialized under the same graph warehouse + manifest. Keyed by
-    BOTH input signatures: the warehouse dir carries the lineitem key
-    and the artifact dir carries the orders key (ADVICE r9 — an
-    orders-only change such as an o_custkey remap must re-key this
-    artifact even though lineitem is unchanged)."""
-
-    def _build() -> DataFrame:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        return (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"),
-                F.col("l_partkey").alias("dst"),
-            )
-            .distinct()
-        )
-
-    if artifacts_mode() == "off":
-        return _lazy_ckpt(_build())
-    wh = graph_warehouse(spark, sf_dir)
-    root = os.path.join(wh, f"bipartite-{orders_key(spark, sf_dir)}")
-    path = os.path.join(root, "edges")
-    if _manifest(root) is None:
-        _build().write.mode("overwrite").parquet(path)
-        _commit(
-            root,
-            {
-                "tables": ["edges"],
-                "n_edges": spark.read.parquet(path).count(),
-            },
-        )
-    return spark.read.parquet(path)
+    """DISTINCT customer->part purchase edge list (src, dst), the HITS
+    bipartite graph."""
+    return _bipartite(spark, sf_dir)[0]
 
 
 def bipartite_n_edges(spark: SparkSession, sf_dir: str) -> int:
     """Distinct bipartite edge count from the manifest (a literal, not
-    a scan); falls back to one parquet count for manifests written
-    before the key existed. The HITS consumer uses it to pick the
-    driver-side small-graph fast path without an extra job."""
-    if artifacts_mode() != "off":
-        wh = graph_warehouse(spark, sf_dir)
-        root = os.path.join(wh, f"bipartite-{orders_key(spark, sf_dir)}")
-        m = _manifest(root)
-        if m is not None and "n_edges" in m:
-            return int(m["n_edges"])
-    return ensure_purchase_bipartite(spark, sf_dir).count()
+    a scan). The HITS consumer uses it to pick the driver-side
+    small-graph fast path without an extra job."""
+    return _bipartite(spark, sf_dir, stat="n_edges")
 
 
 def append_to_purchase_bipartite(
@@ -696,70 +550,30 @@ def append_to_purchase_bipartite(
 ) -> DataFrame:
     """Incremental maintenance for the HITS bipartite artifact (the
     customer→part twin of `append_to_copurchase_graph`): join the
-    ingest batch's orders × lineitem (delta-only — bipartite edges
-    join through o_orderkey, so whole-order batches never form an
-    edge across base and delta), then merge into the stored DISTINCT
-    edge list with a union + distinct over the OUTPUT table, and
-    publish under the combined corpus's double key (lineitem-keyed
-    warehouse, orders-keyed artifact dir) that
-    `ensure_purchase_bipartite` computes — consumers serve it
-    unchanged. O(|E| + |delta edges|), never the accumulated input."""
-    base = ensure_purchase_bipartite(spark, base_sf_dir)
-
-    wh = graph_warehouse(spark, out_sf_dir)
-    root = os.path.join(wh, f"bipartite-{orders_key(spark, out_sf_dir)}")
-    path = os.path.join(root, "edges")
-    if _manifest(root) is None:
-        o = delta_orders.select("o_orderkey", "o_custkey")
-        li = delta_li.select("l_orderkey", "l_partkey")
-        delta_edges = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"),
-                F.col("l_partkey").alias("dst"),
-            )
-            .distinct()
-        )
-        (
-            base.unionByName(delta_edges)
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _commit(
-            root,
-            {
-                "tables": ["edges"],
-                "n_edges": spark.read.parquet(path).count(),
-            },
-        )
-    return spark.read.parquet(path)
-
-
-def customer_linkage_key(spark: SparkSession, sf_dir: str) -> str:
-    """Signature of the customer columns the fuzzy-linkage family
-    consumes (key, name, nation block)."""
-    return _table_key(
-        spark, sf_dir, "customer", ["c_custkey", "c_name", "c_nationkey"]
-    )
+    ingest batch's orders × lineitem (delta-only — bipartite edges join
+    through o_orderkey, so whole-order batches never form an edge
+    across base and delta), then merge into the stored DISTINCT edge
+    list with a union + distinct over the OUTPUT table, and publish
+    under the combined corpus's key that `ensure_purchase_bipartite`
+    computes. O(|E| + |delta edges|), never the accumulated input."""
+    return _bipartite(
+        spark,
+        out_sf_dir,
+        lambda t: ensure_purchase_bipartite(spark, base_sf_dir)
+        .unionByName(_bipartite_edges(delta_orders, delta_li))
+        .distinct(),
+    )[0]
 
 
 def ensure_fuzzy_customer_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Durable VERIFIED fuzzy-pair table for the customer corpus at
-    ``sf_dir`` (VERDICT r9 next-round #3: `entity_resolution_customers`
-    and `fuzzy_name_pairs` rebuilt the SymSpell deletion-neighborhood
-    keys + levenshtein verify per run, ~12-15 s steady at sf0.1 — the
-    registry's largest non-dirty cost center).
-
-    Columns: (id_a, id_b, name_a, name_b, dist) with id_a < id_b,
-    nation-blocked, levenshtein <= 1 — exactly `operators/linkage.py`'s
-    `fuzzy_pairs` output, which the all-pairs DuckDB oracle proves
-    exhaustive on every green verify. Built once per customer-content
-    key (the `lineitem_key` discipline: count + order-insensitive
-    xxhash64 over the consumed columns), then every consumer is a
-    parquet read + its own downstream composition (CC, survivors).
+    """VERIFIED fuzzy-pair table for the customer corpus at ``sf_dir``:
+    (id_a, id_b, name_a, name_b, dist) with id_a < id_b, nation-blocked,
+    levenshtein <= 1 — `operators/linkage.py`'s `fuzzy_pairs` output,
+    which the all-pairs DuckDB oracle proves exhaustive on every green
+    verify. Consumers (`entity_resolution_customers`,
+    `fuzzy_name_pairs`) read it and compose their own downstream steps.
 
     At 100 TB this is the materialized candidate/verified-match table
     every production MDM/linkage stack maintains; re-deriving the
@@ -769,46 +583,31 @@ def ensure_fuzzy_customer_pairs(
         fuzzy_pairs,
     )
 
-    def _build() -> DataFrame:
-        c = load_table(spark, sf_dir, "customer")
-        return fuzzy_pairs(
-            c,
-            id_col="c_custkey",
-            name_col="c_name",
-            block_cols=["c_nationkey"],
-        )
-
-    if artifacts_mode() == "off":
-        return _lazy_ckpt(_build())
-    root = os.path.join(
-        warehouse_root(),
-        f"linkage-{customer_linkage_key(spark, sf_dir)}",
-    )
-    path = os.path.join(root, "pairs")
-    if _manifest(root) is None:
-        _build().write.mode("overwrite").parquet(path)
-        _commit(
-            root,
-            {
-                "tables": ["pairs"],
-                "n_pairs": spark.read.parquet(path).count(),
-            },
-        )
-    return spark.read.parquet(path)
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            warehouse_root(), f"linkage-{customer_linkage_key(spark, sf_dir)}"
+        ),
+        {
+            "pairs": lambda t: fuzzy_pairs(
+                load_table(spark, sf_dir, "customer"),
+                id_col="c_custkey",
+                name_col="c_name",
+                block_cols=["c_nationkey"],
+            )
+        },
+    )[0]
 
 
 def ensure_customer_entity_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Durable (c_custkey, cluster_id) entity-cluster table over the
-    verified fuzzy pairs — the second half of VERDICT r9 #3. The CC
-    fixpoint over the fuzzy-name chain components runs ~28 label-
-    propagation rounds (consecutive customer numbers are all lev-1
-    neighbors, so components are thousands-long chains) at ~0.35 s of
-    job overhead per round — ~10 s per query even with the pair build
-    amortized. A production MDM/linkage stack maintains the resolved
-    entity-cluster table as state, exactly like this repo's document
-    dedup index (plans/dedup_index.py); queries read it.
+    """(c_custkey, cluster_id) entity clusters over the verified fuzzy
+    pairs. The CC fixpoint over the fuzzy-name chain components runs
+    ~28 label-propagation rounds (consecutive customer numbers are all
+    lev-1 neighbors, so components are thousands-long chains); a
+    production MDM/linkage stack keeps the resolved entity-cluster
+    table as state, like the document dedup index.
 
     Keyed under the same linkage-{customer signature} root as the
     pairs, so any change to the consumed customer columns re-keys
@@ -819,47 +618,35 @@ def ensure_customer_entity_clusters(
         dup_clusters,
     )
 
-    def _build() -> DataFrame:
-        pairs = ensure_fuzzy_customer_pairs(spark, sf_dir)
-        c = load_table(spark, sf_dir, "customer").select("c_custkey")
-        return dup_clusters(
-            c, pairs, id_col="c_custkey", a_col="id_a", b_col="id_b"
-        )
-
-    if artifacts_mode() == "off":
-        return _lazy_ckpt(_build())
-    root = os.path.join(
-        warehouse_root(),
-        f"linkage-{customer_linkage_key(spark, sf_dir)}",
-        "clusters",
-    )
-    path = os.path.join(root, "labels")
-    if _manifest(root) is None:
-        _build().write.mode("overwrite").parquet(path)
-        _commit(
-            root,
-            {
-                "tables": ["labels"],
-                "n_rows": spark.read.parquet(path).count(),
-            },
-        )
-    return spark.read.parquet(path)
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            warehouse_root(),
+            f"linkage-{customer_linkage_key(spark, sf_dir)}",
+            "clusters",
+        ),
+        {
+            "labels": lambda t: dup_clusters(
+                load_table(spark, sf_dir, "customer").select("c_custkey"),
+                ensure_fuzzy_customer_pairs(spark, sf_dir),
+                id_col="c_custkey",
+                a_col="id_a",
+                b_col="id_b",
+            )
+        },
+    )[0]
 
 
 def ensure_audio_phash(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable (hashes, clusters) for the audio perceptual chain
-    (VERDICT r9 #2: `audio_phash_neardup` was the costliest new query —
-    the WAV synth/decode/hash Arrow pass plus rep-level CC re-ran per
-    query). Both tables are deterministic functions of the documents
-    corpus, so they live under the content-keyed corpus warehouse like
-    the chunk embeddings: hashes = (doc_id, ahash) from the envelope
-    aHash over real decoded WAV bytes; clusters = (doc_id, cluster_id)
-    from distinct-hash-level CC at Hamming <= 6. The oracle still
-    restates the full inline derivation (closed-form samples ->
-    energies -> bits -> brute-forced pairs -> recursive closure), so
-    every green verify proves artifact == inline end to end."""
+    """(hashes, clusters) for the audio perceptual chain: hashes =
+    (doc_id, ahash) from the envelope aHash over real decoded WAV
+    bytes; clusters = (doc_id, cluster_id) from distinct-hash-level CC
+    at Hamming <= 6. The oracle still restates the full inline
+    derivation (closed-form samples -> energies -> bits -> brute-forced
+    pairs -> recursive closure), so every green verify proves
+    artifact == inline end to end."""
     from commercial_rfp_data_pipeline_spark.operators.multimodal import (
         AHASH_HAM_T,
         ahash_neardup_clusters,
@@ -867,50 +654,32 @@ def ensure_audio_phash(
         synth_wav_corpus,
     )
 
-    if artifacts_mode() == "off":
-        docs = load_table(spark, sf_dir, "documents")
-        hashes = _lazy_ckpt(
-            perceptual_ahash_audio_envelope(synth_wav_corpus(docs))
-        )
-        clusters = ahash_neardup_clusters(hashes, max_hamming=AHASH_HAM_T)
-        return hashes, clusters
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "audio_phash_v1")
-    h_path = os.path.join(root, "hashes")
-    c_path = os.path.join(root, "clusters")
-    if _manifest(root) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        hashes = perceptual_ahash_audio_envelope(synth_wav_corpus(docs))
-        hashes.write.mode("overwrite").parquet(h_path)
-        built = spark.read.parquet(h_path)
-        (
-            ahash_neardup_clusters(built, max_hamming=AHASH_HAM_T)
-            .write.mode("overwrite")
-            .parquet(c_path)
-        )
-        _commit(root, {"tables": ["hashes", "clusters"]})
-    return spark.read.parquet(h_path), spark.read.parquet(c_path)
+    return materialize(
+        spark,
+        lambda: os.path.join(corpus_warehouse(spark, sf_dir), "audio_phash_v1"),
+        {
+            "hashes": lambda t: perceptual_ahash_audio_envelope(
+                synth_wav_corpus(load_table(spark, sf_dir, "documents"))
+            ),
+            "clusters": lambda t: ahash_neardup_clusters(
+                t["hashes"], max_hamming=AHASH_HAM_T
+            ),
+        },
+    )
 
 
 def ensure_image_phash(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Durable (ahash, dhash, pairs, clusters) for the IMAGE
-    perceptual chain — the same treatment `ensure_audio_phash` gave
-    the audio chain, motivated by the r10 certified bench:
-    `phash_method_agreement` (11.7 s) and `multimodal_phash_neardup`
-    (7.1 s) were the two largest remaining cost centers, and both
-    spend it recomputing the two hash passes + banded candidate joins
-    per run. All four tables are deterministic functions of the
-    documents corpus, so they live under the content-keyed corpus
-    warehouse: ahash/dhash = (doc_id, <hex>, bits, bands); pairs =
-    `phash_agreement_pairs` (doc_a, doc_b, ham_ahash, ham_dhash),
-    every pair either method flags at Hamming <= 6; clusters =
-    (doc_id, cluster_id) CC over the aHash-flagged pairs with ALL docs
-    as nodes (singletons included). The serving queries' oracles still
-    restate the full inline derivation (grid -> bits -> brute-forced
-    all-pairs -> recursive closure), so every green verify proves
-    artifact == inline end to end."""
+    """(ahash, dhash, pairs, clusters) for the IMAGE perceptual chain:
+    ahash/dhash = (doc_id, <hex>, bits, bands); pairs =
+    `phash_agreement_pairs` (doc_a, doc_b, ham_ahash, ham_dhash), every
+    pair either method flags at Hamming <= 6; clusters = (doc_id,
+    cluster_id) CC over the aHash-flagged pairs with ALL docs as nodes
+    (singletons included). The serving queries' oracles still restate
+    the full inline derivation (grid -> bits -> brute-forced all-pairs
+    -> recursive closure), so every green verify proves artifact ==
+    inline end to end."""
     from commercial_rfp_data_pipeline_spark.operators.dedup import (
         dup_clusters,
     )
@@ -922,105 +691,54 @@ def ensure_image_phash(
         phash_agreement_pairs,
     )
 
-    if artifacts_mode() == "off":
-        docs = load_table(spark, sf_dir, "documents")
-        b = attach_binary(docs)
-        ah = _lazy_ckpt(perceptual_ahash(b))
-        dh = _lazy_ckpt(perceptual_dhash(b))
-        pairs = _lazy_ckpt(
-            phash_agreement_pairs(ah, dh, max_hamming=AHASH_HAM_T)
-        )
-        clusters = dup_clusters(
-            docs.select("doc_id"),
-            pairs.filter(F.col("ham_ahash") <= AHASH_HAM_T),
-        )
-        return ah, dh, pairs, clusters
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "image_phash_v1")
-    a_path = os.path.join(root, "ahash")
-    d_path = os.path.join(root, "dhash")
-    p_path = os.path.join(root, "pairs")
-    c_path = os.path.join(root, "clusters")
-    if _manifest(root) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        b = attach_binary(docs)
-        perceptual_ahash(b).write.mode("overwrite").parquet(a_path)
-        perceptual_dhash(b).write.mode("overwrite").parquet(d_path)
-        ah = spark.read.parquet(a_path)
-        dh = spark.read.parquet(d_path)
-        phash_agreement_pairs(ah, dh, max_hamming=AHASH_HAM_T).write.mode(
-            "overwrite"
-        ).parquet(p_path)
-        pairs = spark.read.parquet(p_path)
-        (
-            dup_clusters(
-                docs.select("doc_id"),
-                pairs.filter(F.col("ham_ahash") <= AHASH_HAM_T),
-            )
-            .write.mode("overwrite")
-            .parquet(c_path)
-        )
-        _commit(root, {"tables": ["ahash", "dhash", "pairs", "clusters"]})
-    return (
-        spark.read.parquet(a_path),
-        spark.read.parquet(d_path),
-        spark.read.parquet(p_path),
-        spark.read.parquet(c_path),
+    docs = functools.cache(lambda: load_table(spark, sf_dir, "documents"))
+    binary = functools.cache(lambda: attach_binary(docs()))
+    return materialize(
+        spark,
+        lambda: os.path.join(corpus_warehouse(spark, sf_dir), "image_phash_v1"),
+        {
+            "ahash": lambda t: perceptual_ahash(binary()),
+            "dhash": lambda t: perceptual_dhash(binary()),
+            "pairs": lambda t: phash_agreement_pairs(
+                t["ahash"], t["dhash"], max_hamming=AHASH_HAM_T
+            ),
+            "clusters": lambda t: dup_clusters(
+                docs().select("doc_id"),
+                t["pairs"].filter(F.col("ham_ahash") <= AHASH_HAM_T),
+            ),
+        },
     )
 
 
 def ensure_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable verified word-3-gram Jaccard pair table at the shared
-    registry operating point (threshold 1/2, max_doc_freq 100): the
-    PPJoin prefix-filter join + exact verify is the dominant per-run
-    cost of BOTH `jaccard_prefix_filter_pairs` (7.7 s certified) and
-    `split_leakage_neardup` (9.3 s) — the round-9 token-index artifact
-    removed the shingle/df build but left the pair join inline. The
-    pair set is a deterministic function of the documents corpus, so
-    it lives beside the token index under the content-keyed corpus
-    warehouse; both servers' oracles restate the full postings
-    derivation, so every green verify proves stored == inline."""
+    """Verified word-3-gram Jaccard pair table at the shared registry
+    operating point (threshold 1/2, max_doc_freq 100): the PPJoin
+    prefix-filter join + exact verify is the dominant cost of both
+    `jaccard_prefix_filter_pairs` and `split_leakage_neardup`. Both
+    servers' oracles restate the full postings derivation, so every
+    green verify proves stored == inline."""
     from commercial_rfp_data_pipeline_spark.operators.textops import (
         jaccard_prefix_filter_pairs,
     )
 
-    def _build() -> DataFrame:
+    def pairs(t: Tables) -> DataFrame:
         toks, dft, _ = ensure_token_index(spark, sf_dir, k=3)
         return jaccard_prefix_filter_pairs(
             None,
             t_num=1,
             t_den=2,
             max_doc_freq=100,
-            distinct_sh=toks.select(
-                "doc_id", F.col("tok").alias("sh")
-            ),
+            distinct_sh=toks.select("doc_id", F.col("tok").alias("sh")),
             dft=dft.select(F.col("tok").alias("sh"), "df"),
         )
 
-    if artifacts_mode() == "off":
-        return _lazy_ckpt(_build())
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "jaccard_pairs_k3_t12_df100")
-    path = os.path.join(root, "pairs")
-    if _manifest(root) is None:
-        _build().write.mode("overwrite").parquet(path)
-        _commit(root, {"tables": ["pairs"]})
-    return spark.read.parquet(path)
-
-
-def embeddings_key(spark: SparkSession, sf_dir: str) -> str:
-    """Signature of the embeddings table the ANN-model artifacts
-    consume (vec_id + vector + label — label participates because the
-    filtered-search artifacts store it in the cell layout)."""
-    return _table_key(
-        spark, sf_dir, "embeddings", ["vec_id", "embedding", "label"]
-    )
-
-
-def vector_warehouse(spark: SparkSession, sf_dir: str) -> str:
-    return os.path.join(
-        warehouse_root(), f"vectors-{embeddings_key(spark, sf_dir)}"
-    )
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            corpus_warehouse(spark, sf_dir), "jaccard_pairs_k3_t12_df100"
+        ),
+        {"pairs": pairs},
+    )[0]
 
 
 def _ann_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,169 +757,124 @@ def _ann_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_ivf_models(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable TRAINED coarse quantizer for the IVF family — (cents,
-    asg) where cents = the 16 Lloyd centroids (seed "ivf", 2 rounds,
-    6-dp component rounding; columns cent_id, cent_vec, _cn) and asg =
-    the full cell layout (vec_id, embedding, _n, cent_id, cent_sim,
-    label) — the same shape `ensure_ivf_index` materializes for the
-    chunk store. Four registry queries (`ivf_topk_search`,
-    `ivf_filtered_topk`, `ivfpq_search_topk`, `semdedup_prune`) re-ran
-    the identical deterministic training per invocation — at 100 TB
-    the coarse quantizer is THE canonical maintained index artifact
-    (FAISS trains once, serves forever; retrain is an explicit
-    lifecycle event, which the content key models structurally: a
-    changed embeddings table re-keys the warehouse; at scale the asg
-    table would additionally be laid out partitionBy(cent_id) so
-    probes prune to their cells' files). Every consumer's oracle
-    still states the full inline Lloyd unroll, so green verify proves
-    artifact == inline."""
+    """TRAINED coarse quantizer for the IVF family — (cents, asg) where
+    cents = the 16 Lloyd centroids (seed "ivf", 2 rounds, 6-dp
+    component rounding; columns cent_id, cent_vec, _cn) and asg = the
+    full cell layout (vec_id, embedding, _n, cent_id, cent_sim, label),
+    the same shape `ensure_ivf_index` materializes for the chunk store.
+    `ivf_topk_search`, `ivf_filtered_topk`, `ivfpq_search_topk` and
+    `semdedup_prune` share the training. At 100 TB the coarse quantizer
+    is the canonical maintained index artifact (train once, serve
+    forever; a changed embeddings table re-keys the warehouse). Every
+    consumer's oracle still states the full inline Lloyd unroll, so
+    green verify proves artifact == inline."""
     from commercial_rfp_data_pipeline_spark.operators.vector import (
         ivf_assign,
         ivf_centroids,
     )
 
-    if artifacts_mode() == "off":
-        v = _ann_vectors(spark, sf_dir)
-        cents = _lazy_ckpt(
-            ivf_centroids(v.select("vec_id", "embedding"), n_centroids=16)
-        )
-        asg = (
-            ivf_assign(v.select("vec_id", "embedding"), cents=cents)
-            .join(v.select("vec_id", "label"), "vec_id")
-            .select(
-                "vec_id", "embedding", "_n", "cent_id", "cent_sim", "label"
+    v = functools.cache(lambda: _ann_vectors(spark, sf_dir))
+    return materialize(
+        spark,
+        lambda: os.path.join(vector_warehouse(spark, sf_dir), "ivf16_v1"),
+        {
+            "cents": lambda t: ivf_centroids(
+                v().select("vec_id", "embedding"), n_centroids=16
+            ),
+            "asg": lambda t: ivf_assign(
+                v().select("vec_id", "embedding"), cents=t["cents"]
             )
-        )
-        return cents, _lazy_ckpt(asg)
-    wh = vector_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "ivf16_v1")
-    cents_path = os.path.join(root, "cents")
-    asg_path = os.path.join(root, "asg")
-    if _manifest(root) is None:
-        v = _ann_vectors(spark, sf_dir)
-        ivf_centroids(
-            v.select("vec_id", "embedding"), n_centroids=16
-        ).write.mode("overwrite").parquet(cents_path)
-        cents = spark.read.parquet(cents_path)
-        (
-            ivf_assign(
-                v.select("vec_id", "embedding"), cents=cents
-            )
-            .join(v.select("vec_id", "label"), "vec_id")
-            .select(
-                "vec_id", "embedding", "_n", "cent_id", "cent_sim", "label"
-            )
-            .write.mode("overwrite")
-            .parquet(asg_path)
-        )
-        _commit(root, {"tables": ["cents", "asg"]})
-    return spark.read.parquet(cents_path), spark.read.parquet(asg_path)
+            .join(v().select("vec_id", "label"), "vec_id")
+            .select("vec_id", "embedding", "_n", "cent_id", "cent_sim", "label"),
+        },
+    )
 
 
 def ensure_pq_models(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable PQ codebooks + corpus codes (m_sub=4, k_codes=8, one
-    Lloyd round, exact-decimal assignment distances) — the memory-side
-    half of the IVF-PQ index, shared by `pq_adc_topk` and
-    `ivfpq_search_topk`. books = (m, code_id, code_vec double[16]);
-    codes = (vec_id, m, code). Deterministic from the embeddings
-    table; consumers' oracles restate the full training CTE chain."""
+    """PQ codebooks + corpus codes (m_sub=4, k_codes=8, one Lloyd round,
+    exact-decimal assignment distances) — the memory-side half of the
+    IVF-PQ index, shared by `pq_adc_topk` and `ivfpq_search_topk`.
+    books = (m, code_id, code_vec double[16]); codes = (vec_id, m,
+    code). Consumers' oracles restate the full training CTE chain."""
     from commercial_rfp_data_pipeline_spark.operators.vector import (
         pq_codebooks,
         pq_encode,
     )
 
-    if artifacts_mode() == "off":
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        books = _lazy_ckpt(pq_codebooks(v, dim=64))
-        return books, _lazy_ckpt(pq_encode(v, books, dim=64))
-    wh = vector_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "pq_m4_k8_v1")
-    books_path = os.path.join(root, "books")
-    codes_path = os.path.join(root, "codes")
-    if _manifest(root) is None:
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        pq_codebooks(v, dim=64).write.mode("overwrite").parquet(
-            books_path
-        )
-        books = spark.read.parquet(books_path)
-        pq_encode(v, books, dim=64).write.mode("overwrite").parquet(
-            codes_path
-        )
-        _commit(root, {"tables": ["books", "codes"]})
-    return spark.read.parquet(books_path), spark.read.parquet(codes_path)
+    v = functools.cache(
+        lambda: _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
+    )
+    return materialize(
+        spark,
+        lambda: os.path.join(vector_warehouse(spark, sf_dir), "pq_m4_k8_v1"),
+        {
+            "books": lambda t: pq_codebooks(v(), dim=64),
+            "codes": lambda t: pq_encode(v(), t["books"], dim=64),
+        },
+    )
 
 
 def ensure_knn_graph8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable exact 8-NN base graph (src_id, nbr_id, sim, rnk) — the
-    layer the navigable-graph ANN family (`knn_graph_edges`,
+    """Exact 8-NN base graph (src_id, nbr_id, sim, rnk) — the layer the
+    navigable-graph ANN family (`knn_graph_edges`,
     `graph_ann_beam_topk`, `graph_ann_hnsw_topk`,
-    `graph_ann_hnsw_deep_topk`) rebuilt per query with the O(n^2/2)
-    block-grid pass. The graph is THE persisted half of any HNSW-style
-    index (build once, serve beams forever — `ensure_graph_index`
-    already materializes exactly this for the chunk store);
-    content-keyed on the embeddings table like every vector
-    artifact. The upper-layer graphs stay inline: they are built over
-    the ~n/16 (resp. n/8, n/64) promoted subsets, a <1% slice of the
-    base-graph cost."""
+    `graph_ann_hnsw_deep_topk`) shares: the persisted half of any
+    HNSW-style index. The upper-layer graphs stay inline: they are
+    built over the ~n/16 (resp. n/8, n/64) promoted subsets, a <1%
+    slice of the base-graph cost."""
     from commercial_rfp_data_pipeline_spark.operators.vector import (
         knn_graph,
     )
 
-    if artifacts_mode() == "off":
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        return _lazy_ckpt(knn_graph(v, m=8))
-    wh = vector_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "knn_graph_m8_v1")
-    path = os.path.join(root, "graph")
-    if _manifest(root) is None:
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        knn_graph(v, m=8).write.mode("overwrite").parquet(path)
-        _commit(root, {"tables": ["graph"]})
-    return spark.read.parquet(path)
+    return materialize(
+        spark,
+        lambda: os.path.join(vector_warehouse(spark, sf_dir), "knn_graph_m8_v1"),
+        {
+            "graph": lambda t: knn_graph(
+                _ann_vectors(spark, sf_dir).select("vec_id", "embedding"), m=8
+            )
+        },
+    )[0]
 
 
 def ensure_nn_descent_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable NN-descent approximate 8-NN graph (m=8, 2 rounds,
-    4-bit x 6-table LSH init — the registry operating point) —
-    `nn_descent_graph`'s output state. Same lifecycle argument as the
-    exact graph: the approximate build exists precisely so
+    """NN-descent approximate 8-NN graph (m=8, 2 rounds, 4-bit x
+    6-table LSH init — the registry operating point),
+    `nn_descent_graph`'s output state: the approximate build exists so
     billion-vector graphs are built once and then maintained, not
     rebuilt per read."""
     from commercial_rfp_data_pipeline_spark.operators.vector import (
         nn_descent_graph,
     )
 
-    if artifacts_mode() == "off":
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        return _lazy_ckpt(
-            nn_descent_graph(v, dim=64, m=8, rounds=2, n_tables=6)
-        )
-    wh = vector_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "nn_descent_m8_t6_v1")
-    path = os.path.join(root, "graph")
-    if _manifest(root) is None:
-        v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
-        nn_descent_graph(
-            v, dim=64, m=8, rounds=2, n_tables=6
-        ).write.mode("overwrite").parquet(path)
-        _commit(root, {"tables": ["graph"]})
-    return spark.read.parquet(path)
+    return materialize(
+        spark,
+        lambda: os.path.join(
+            vector_warehouse(spark, sf_dir), "nn_descent_m8_t6_v1"
+        ),
+        {
+            "graph": lambda t: nn_descent_graph(
+                _ann_vectors(spark, sf_dir).select("vec_id", "embedding"),
+                dim=64,
+                m=8,
+                rounds=2,
+                n_tables=6,
+            )
+        },
+    )[0]
 
 
 def ensure_minhash_eval(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable (sigs, truth02) for the MinHash banding-evaluation pair
-    (`minhash_band_eval` 5.1 s certified, `lsh_banding_parameter_sweep`
-    5.8 s — the two largest text-family cost centers left): sigs = the
+    """(sigs, truth02) for the MinHash banding-evaluation pair
+    (`minhash_band_eval`, `lsh_banding_parameter_sweep`): sigs = the
     8-seed MinHash signature table (doc_id, seed, mh) over word-3-gram
     shingles; truth02 = the exact df<=100-capped Jaccard >= 0.2 pair
     table both queries evaluate against, stored with its (common,
-    jaccard) columns so `ngram_jaccard_pairs` serves from it too.
-    Signatures and ground truth are exactly what a dedup pipeline
-    materializes once per corpus before sweeping banding configs; all
+    jaccard) columns so `ngram_jaccard_pairs` serves from it too. All
     consumers' oracles restate the full shingle->minhash->band
     derivation."""
     from commercial_rfp_data_pipeline_spark.operators.textops import (
@@ -1210,131 +883,77 @@ def ensure_minhash_eval(
         shingles,
     )
 
-    if artifacts_mode() == "off":
-        docs = load_table(spark, sf_dir, "documents")
-        par = spark.sparkContext.defaultParallelism
-        sh = shingles(docs, parallelism=par)
-        return (
-            _lazy_ckpt(minhash_signatures(sh)),
-            _lazy_ckpt(jaccard_pairs(sh, threshold=0.2, max_doc_freq=100)),
+    sh = functools.cache(
+        lambda: shingles(
+            load_table(spark, sf_dir, "documents"),
+            parallelism=spark.sparkContext.defaultParallelism,
         )
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "minhash_eval_v1")
-    sigs_path = os.path.join(root, "sigs")
-    truth_path = os.path.join(root, "truth02")
-    if _manifest(root) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        par = spark.sparkContext.defaultParallelism
-        sh = shingles(docs, parallelism=par)
-        minhash_signatures(sh).write.mode("overwrite").parquet(sigs_path)
-        (
-            jaccard_pairs(sh, threshold=0.2, max_doc_freq=100)
-            .write.mode("overwrite")
-            .parquet(truth_path)
-        )
-        _commit(root, {"tables": ["sigs", "truth02"]})
-    return spark.read.parquet(sigs_path), spark.read.parquet(truth_path)
+    )
+    return materialize(
+        spark,
+        lambda: os.path.join(corpus_warehouse(spark, sf_dir), "minhash_eval_v1"),
+        {
+            "sigs": lambda t: minhash_signatures(sh()),
+            "truth02": lambda t: jaccard_pairs(
+                sh(), threshold=0.2, max_doc_freq=100
+            ),
+        },
+    )
 
 
 def ensure_clean_pool(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Durable (kept, clean) doc-id tables for the composed training
-    pipelines: kept = docs surviving the Gopher repetition/symbol
-    quality gate over the % 7 != 0 corpus split; clean = kept minus
+    """(kept, clean) doc-id tables for the composed training pipelines:
+    kept = docs surviving the Gopher repetition/symbol quality gate
+    over the % 7 != 0 corpus split; clean = kept minus
     benchmark-contaminated docs (5-gram overlap vs the % 7 == 0 eval
-    split). `training_data_pipeline` (5.7 s certified) and
-    `training_data_pipeline_dsir` (8.3 s) each re-ran both stages per
-    invocation; a production curation run writes the cleaned corpus
-    between stages exactly once (the pin_eager stage boundary made
-    durable). Deterministic functions of the documents corpus ->
-    corpus-keyed warehouse; both pipelines' oracles restate the full
-    quality + contamination CTE chains, so green verify proves
+    split). A production curation run writes the cleaned corpus
+    between stages exactly once. Both pipelines' oracles restate the
+    full quality + contamination CTE chains, so green verify proves
     artifact == inline."""
     from commercial_rfp_data_pipeline_spark.operators.textops import (
         contamination_overlap,
         repetition_features,
     )
 
-    if artifacts_mode() == "off":
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(F.col("doc_id") % 7 != 0).select(
-            "doc_id", "text"
-        )
-        eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
-        kept = _lazy_ckpt(
-            corpus.join(
-                repetition_features(corpus)
-                .filter("keep")
-                .select("doc_id"),
-                "doc_id",
-            )
-        )
-        contaminated = (
-            contamination_overlap(kept, eval_docs, k=5)
-            .filter("contaminated")
-            .select("doc_id")
-        )
-        clean = kept.join(contaminated, "doc_id", "left_anti")
-        return kept, _lazy_ckpt(clean)
-    wh = corpus_warehouse(spark, sf_dir)
-    root = os.path.join(wh, "clean_pool_v1")
-    kept_path = os.path.join(root, "kept")
-    clean_path = os.path.join(root, "clean")
-    if _manifest(root) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(F.col("doc_id") % 7 != 0).select(
-            "doc_id", "text"
-        )
-        eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus.join(
+    docs = functools.cache(lambda: load_table(spark, sf_dir, "documents"))
+
+    def kept(t: Tables) -> DataFrame:
+        corpus = docs().filter(F.col("doc_id") % 7 != 0).select("doc_id", "text")
+        return corpus.join(
             repetition_features(corpus).filter("keep").select("doc_id"),
             "doc_id",
-        ).write.mode("overwrite").parquet(kept_path)
-        kept = spark.read.parquet(kept_path)
+        )
+
+    def clean(t: Tables) -> DataFrame:
         contaminated = (
-            contamination_overlap(kept, eval_docs, k=5)
+            contamination_overlap(
+                t["kept"], docs().filter(F.col("doc_id") % 7 == 0), k=5
+            )
             .filter("contaminated")
             .select("doc_id")
         )
-        kept.join(contaminated, "doc_id", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(clean_path)
-        _commit(root, {"tables": ["kept", "clean"]})
-    return spark.read.parquet(kept_path), spark.read.parquet(clean_path)
+        return t["kept"].join(contaminated, "doc_id", "left_anti")
+
+    return materialize(
+        spark,
+        lambda: os.path.join(corpus_warehouse(spark, sf_dir), "clean_pool_v1"),
+        {"kept": kept, "clean": clean},
+    )
 
 
-def dedup_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """The durable dedup-cluster index ensured at this corpus's
-    warehouse; returns the index root for the dedup_index.* readers."""
+def dedup_index_for(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(fingerprints, clusters) of the corpus's dedup-cluster index
+    (plans/dedup_index.py), kept in the corpus warehouse."""
     from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
         ensure_dedup_index,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    if artifacts_mode() == "off":
-        # no durable warehouse in off mode: the "root" is just the
-        # handle the inline tables register under (dedup_index.py) —
-        # skip the content-signature scan a real warehouse dir needs
-        wh = f"__off__:{sf_dir}"
-    else:
-        wh = corpus_warehouse(spark, sf_dir)
-    ensure_dedup_index(spark, docs, wh)
-    return wh
-
-
-def artifact_status(spark: SparkSession, sf_dir: str) -> dict:
-    """Diagnostic: which shared artifacts exist for this corpus."""
-    wh = corpus_warehouse(spark, sf_dir)
-    out = {"warehouse": wh}
-    for name, sub in [
-        ("chunk_emb", os.path.join("chunk_emb", "MANIFEST.json")),
-        ("dedup", os.path.join("dedup", "MANIFEST.json")),
-    ]:
-        p = os.path.join(wh, sub)
-        try:
-            with open(p) as f:
-                out[name] = json.load(f)
-        except (OSError, ValueError):
-            out[name] = None
-    return out
+    return ensure_dedup_index(
+        spark,
+        load_table(spark, sf_dir, "documents"),
+        lambda: corpus_warehouse(spark, sf_dir),
+    )

@@ -1,16 +1,17 @@
-"""Durable dedup-cluster index (round 8, VERDICT r7 #2).
+"""Durable dedup-cluster index.
 
 The near-dup cluster table (SimHash fingerprints -> banded pairs ->
-connected components -> quality survivors) was recomputed from scratch
-by every consumer (`dedup_survivors`, `training_data_pipeline`,
-`preference_pairs_from_clusters`, `split_leakage_neardup` — ~6-9 s
-each at sf0.1). This module makes it the FOURTH durable index next to
-BM25 / IVF / graph (plans/index_lifecycle.py), with the same
-manifest-committed lifecycle:
+connected components -> quality survivors) is shared by every dedup
+consumer (`dedup_survivors`, `training_data_pipeline`,
+`preference_pairs_from_clusters`, `split_leakage_neardup`, ...). It is
+the FOURTH durable index next to BM25 / IVF / graph
+(plans/index_lifecycle.py), with the same manifest-committed
+lifecycle:
 
-- **ensure**: full build — fingerprints + quality per doc, cluster
-  labels bucketed by ``pmod(cluster_id, N_BUCKETS)`` — committed under
-  one atomic manifest.
+- **ensure**: full build through `materialize` (plans/artifacts.py), so
+  it honours the warm/off artifact modes — fingerprints + quality per
+  doc, cluster labels bucketed by ``pmod(cluster_id, N_BUCKETS)`` —
+  committed under one atomic manifest.
 - **append**: replay-idempotent incremental admission. New docs band-
   join against the STORED fingerprints (the same cross-frame LSH check
   `streaming/ingest.neardup_ingest_sink` runs), then a BOUNDED
@@ -24,8 +25,9 @@ manifest-committed lifecycle:
   merged label min(new ids, old cluster ids) equals the from-scratch
   min over the full component: append == rebuild
   (test_dedup_index_append_equals_rebuild).
-- **serve**: `dedup_clusters_table` / `dedup_survivors_from_index`
-  read exactly the committed dirs.
+- **serve**: `ensure_dedup_index` returns the committed (fingerprints,
+  clusters); `dedup_tables` / `dedup_survivors_from_index` read exactly
+  the committed dirs of an existing index.
 
 Crash discipline is identical to BM25: every staged dir is invisible
 until the single ``os.replace`` manifest commit; a replayed append maps
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,23 +57,14 @@ from commercial_rfp_data_pipeline_spark.operators.textops import (
     simhash,
     simhash_pairs,
 )
-from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-    _bm25_commit as _commit,
-)
-from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
-    _bm25_manifest as _manifest,
+from commercial_rfp_data_pipeline_spark.plans.artifacts import materialize
+from commercial_rfp_data_pipeline_spark.plans.manifest import (
+    commit_manifest,
+    read_manifest,
 )
 
 N_BUCKETS = 16  # cluster-table copy-on-write buckets
 MAX_HAMMING = 3  # near-dup threshold (matches simhash_pairs default)
-
-# off-mode (SPARK_GRAFT_ARTIFACTS=off, VERDICT r10 #1) inline tables:
-# ensure_dedup_index registers FRESH lazy (fp, clusters) DataFrames
-# here per call, and dedup_tables serves them instead of parquet.
-# Every consumer ensures before it reads, so each query invocation
-# rebuilds from scratch — this is a handle registry, not a result
-# cache (the stored plans are lazy; nothing computed survives a call).
-_OFF_TABLES: dict[str, tuple[DataFrame, DataFrame]] = {}
 
 
 def _fingerprints(docs: DataFrame) -> DataFrame:
@@ -97,74 +91,59 @@ def _batch_key(fp: DataFrame) -> tuple[str, int]:
     return key, sig["n"]
 
 
+def _bucketed(clusters: DataFrame) -> DataFrame:
+    return clusters.withColumn(
+        "bkt", F.pmod(F.col("cluster_id"), F.lit(N_BUCKETS))
+    ).select("doc_id", "cluster_id", "bkt")
+
+
 def _write_cluster_buckets(
     clusters: DataFrame, root: str, key: str
 ) -> None:
-    (
-        clusters.withColumn(
-            "bkt", F.pmod(F.col("cluster_id"), F.lit(N_BUCKETS))
-        )
-        .select("doc_id", "cluster_id", "bkt")
-        .write.mode("overwrite")
-        .partitionBy("bkt")
-        .parquet(os.path.join(root, "clusters", key))
+    _bucketed(clusters).write.mode("overwrite").partitionBy("bkt").parquet(
+        os.path.join(root, "clusters", key)
     )
 
 
 def ensure_dedup_index(
-    spark: SparkSession, docs: DataFrame, warehouse: str
-) -> str:
-    """Build the durable dedup index from scratch (idempotent: returns
-    the existing index untouched if present)."""
-    from commercial_rfp_data_pipeline_spark.plans.artifacts import (
-        artifacts_mode,
-    )
-
-    root = os.path.join(warehouse, "dedup")
-    if artifacts_mode() == "off":
-        fp_off = _fingerprints(docs).localCheckpoint(eager=False)
-        pairs_off = simhash_pairs(fp_off.select("doc_id", "simhash"))
-        clusters_off = dup_clusters(docs.select("doc_id"), pairs_off)
-        _OFF_TABLES[root] = (
-            fp_off,
-            clusters_off.localCheckpoint(eager=False),
-        )
-        return root
-    if _manifest(root) is not None:
-        return root
-    fp = _fingerprints(docs).localCheckpoint()
-    pairs = simhash_pairs(fp.select("doc_id", "simhash"))
-    clusters = dup_clusters(docs.select("doc_id"), pairs)
-    key = "base"
-    fp.write.mode("overwrite").parquet(os.path.join(root, "fp", key))
-    _write_cluster_buckets(clusters, root, key)
-    _commit(
-        root,
-        {
-            "batches": [key],
-            "buckets": {str(b): key for b in range(N_BUCKETS)},
-        },
-    )
-    return root
-
-
-def dedup_tables(
-    spark: SparkSession, warehouse: str
+    spark: SparkSession,
+    docs: DataFrame,
+    warehouse: str | Callable[[], str],
 ) -> tuple[DataFrame, DataFrame]:
-    """Manifest-resolved (fingerprints, clusters) over exactly the
-    committed dirs. A bucket whose current key holds no dir for it is
-    EMPTY (its rows were relabeled into other buckets) — skipped, not
-    an error."""
-    from commercial_rfp_data_pipeline_spark.plans.artifacts import (
-        artifacts_mode,
+    """(fingerprints, clusters) of the durable dedup index under
+    ``warehouse`` (a path, or a thunk that resolves one only when the
+    warehouse is used), built from ``docs`` when absent. An existing
+    index is served as committed, appends and purges included."""
+    fp, clusters = materialize(
+        spark,
+        lambda: os.path.join(
+            warehouse() if callable(warehouse) else warehouse, "dedup"
+        ),
+        {
+            "fp/base": lambda t: _fingerprints(docs),
+            "clusters/base": lambda t: _bucketed(
+                dup_clusters(
+                    docs.select("doc_id"),
+                    simhash_pairs(t["fp/base"].select("doc_id", "simhash")),
+                )
+            ),
+        },
+        manifest=lambda t: {
+            "batches": ["base"],
+            "buckets": {str(b): "base" for b in range(N_BUCKETS)},
+        },
+        serve=lambda root, m: _read_index(spark, root, m),
+        partition_by={"clusters/base": "bkt"},
     )
+    return fp, clusters.select("doc_id", "cluster_id")
 
-    root = os.path.join(warehouse, "dedup")
-    if artifacts_mode() == "off" and root in _OFF_TABLES:
-        return _OFF_TABLES[root]
-    m = _manifest(root)
-    if m is None:
-        raise ValueError(f"dedup_tables: no index at {root}")
+
+def _read_index(
+    spark: SparkSession, root: str, m: dict
+) -> tuple[DataFrame, DataFrame]:
+    """(fingerprints, clusters) over exactly the dirs manifest ``m``
+    names. A bucket whose current key holds no dir for it is EMPTY (its
+    rows were relabeled into other buckets) — skipped, not an error."""
     fp = spark.read.parquet(
         *[os.path.join(root, "fp", k) for k in m["batches"]]
     )
@@ -173,12 +152,19 @@ def dedup_tables(
         for b, key in m["buckets"].items()
     ]
     paths = [p for p in paths if os.path.isdir(p)]
-    clusters = spark.read.parquet(*paths)
-    return fp, clusters
+    return fp, spark.read.parquet(*paths)
 
 
-def dedup_clusters_table(spark: SparkSession, warehouse: str) -> DataFrame:
-    return dedup_tables(spark, warehouse)[1]
+def dedup_tables(
+    spark: SparkSession, warehouse: str
+) -> tuple[DataFrame, DataFrame]:
+    """The committed (fingerprints, clusters) of the index under
+    ``warehouse``."""
+    root = os.path.join(warehouse, "dedup")
+    m = read_manifest(root)
+    if m is None:
+        raise ValueError(f"dedup_tables: no index at {root}")
+    return _read_index(spark, root, m)
 
 
 def dedup_survivors_from_index(
@@ -230,7 +216,7 @@ def _cross_pairs(fp_new: DataFrame, fp_old: DataFrame) -> DataFrame:
 def purge_from_dedup_index(
     spark: SparkSession, warehouse: str, doc_ids: list
 ) -> dict:
-    """Right-to-be-forgotten for the FOURTH durable index (round 8):
+    """Right-to-be-forgotten for the FOURTH durable index:
     a purged document must leave the fingerprint batches (its simhash
     and quality are derived content) AND the cluster table — and
     removing it can SPLIT its cluster if it was the bridge between two
@@ -248,7 +234,7 @@ def purge_from_dedup_index(
     (test_dedup_index_purge_equals_rebuild — including a bridge-doc
     split). A replayed purge finds no purged rows and no-ops."""
     root = os.path.join(warehouse, "dedup")
-    m = _manifest(root)
+    m = read_manifest(root)
     if m is None:
         raise ValueError(f"purge_from_dedup_index: no index at {root}")
     ids = sorted({int(d) for d in doc_ids})
@@ -257,7 +243,7 @@ def purge_from_dedup_index(
     ).hexdigest()[:8]
     is_purged = F.col("doc_id").isin(ids)
 
-    fp_all, clusters = dedup_tables(spark, warehouse)
+    fp_all, clusters = _read_index(spark, root, m)
     hit_clusters = [
         r.cluster_id
         for r in clusters.filter(is_purged)
@@ -332,7 +318,7 @@ def purge_from_dedup_index(
     buckets = dict(m["buckets"])
     for b in affected:
         buckets[str(b)] = key
-    _commit(root, {"batches": new_batches, "buckets": buckets})
+    commit_manifest(root, {"batches": new_batches, "buckets": buckets})
     # loud post-condition: no purged doc remains anywhere
     fp2, cl2 = dedup_tables(spark, warehouse)
     leftover = (
@@ -365,7 +351,7 @@ def append_to_dedup_index(
     its members, so min(new ids, old cluster ids) over the merged
     component equals the global min."""
     root = os.path.join(warehouse, "dedup")
-    m = _manifest(root)
+    m = read_manifest(root)
     if m is None:
         raise ValueError(
             f"append_to_dedup_index: no index at {root} — run "
@@ -376,7 +362,7 @@ def append_to_dedup_index(
     if key in m["batches"]:
         return {"appended": 0, "replayed": True, "buckets_rewritten": 0}
 
-    fp_old, clusters_old = dedup_tables(spark, warehouse)
+    fp_old, clusters_old = _read_index(spark, root, m)
     in_batch = simhash_pairs(
         fp_new.select("doc_id", "simhash"), max_hamming=MAX_HAMMING
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -468,7 +454,7 @@ def append_to_dedup_index(
     buckets = dict(m["buckets"])
     for b in affected:
         buckets[str(b)] = key
-    _commit(root, {"batches": m["batches"] + [key], "buckets": buckets})
+    commit_manifest(root, {"batches": m["batches"] + [key], "buckets": buckets})
     return {
         "appended": n_new,
         "replayed": False,

@@ -15,7 +15,6 @@ LSH path available for scale.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 
@@ -26,6 +25,10 @@ from commercial_rfp_data_pipeline_spark.io import load_table
 from commercial_rfp_data_pipeline_spark.operators.chunking import chunk_text
 from commercial_rfp_data_pipeline_spark.operators.embedder import HashedBowEmbedder
 from commercial_rfp_data_pipeline_spark.operators.vector import knn_exact
+from commercial_rfp_data_pipeline_spark.plans.manifest import (
+    commit_manifest,
+    read_manifest,
+)
 
 CHUNK_SIZE, CHUNK_OVERLAP = 120, 30  # test-scale; reference 2000/500
 
@@ -421,25 +424,6 @@ def _xxhash_buckets(
 # the union, because every table is a sum of per-batch contributions.
 
 
-def _bm25_manifest(root: str) -> dict | None:
-    try:
-        with open(os.path.join(root, "MANIFEST.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _bm25_commit(root: str, manifest: dict) -> None:
-    """Single atomic commit point: tmp write + os.replace (POSIX rename
-    atomicity) — everything staged before this call is invisible until
-    it lands, so no reader ever sees postings without their matching
-    df/stats."""
-    tmp = os.path.join(root, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(root, "MANIFEST.json"))
-
-
 def _bm25_batch_tables(chunks: DataFrame):
     from commercial_rfp_data_pipeline_spark.operators.textops import words
 
@@ -458,7 +442,7 @@ def ensure_bm25_index(
     """Build the durable BM25 index from scratch (idempotent: returns
     the existing index untouched if present)."""
     root = os.path.join(warehouse, "bm25")
-    if _bm25_manifest(root) is not None:
+    if read_manifest(root) is not None:
         return root
     chunks = chunk_text(docs, size=CHUNK_SIZE, overlap=CHUNK_OVERLAP)
     tf, dl, df = _bm25_batch_tables(chunks)
@@ -469,7 +453,7 @@ def ensure_bm25_index(
     dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).write.mode("overwrite").parquet(os.path.join(root, "stats", key))
-    _bm25_commit(root, {"batches": [key], "df": key, "stats": key})
+    commit_manifest(root, {"batches": [key], "df": key, "stats": key})
     return root
 
 
@@ -490,7 +474,7 @@ def append_to_bm25_index(
     over the union (pytest pins score equality) — the property that
     makes incremental maintenance safe to run forever without drift."""
     root = os.path.join(warehouse, "bm25")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     if manifest is None:
         raise ValueError(
             f"append_to_bm25_index: no index at {root} — run "
@@ -528,7 +512,7 @@ def append_to_bm25_index(
         [(stats_old["n_docs"] + sig["n"], stats_old["sum_dl"] + sig["s"])],
         "n_docs long, sum_dl long",
     ).write.mode("overwrite").parquet(os.path.join(root, "stats", key))
-    _bm25_commit(
+    commit_manifest(
         root,
         {"batches": manifest["batches"] + [key], "df": key, "stats": key},
     )
@@ -538,7 +522,7 @@ def bm25_tables(spark: SparkSession, warehouse: str):
     """Manifest-resolved view of the live index state:
     (tf, dl, df, stats) DataFrames over exactly the committed dirs."""
     root = os.path.join(warehouse, "bm25")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     if manifest is None:
         raise ValueError(f"bm25_tables: no index at {root}")
     tf = spark.read.parquet(
@@ -601,8 +585,7 @@ def bm25_search_index(
 # through and their fresh results are appended for the next caller.
 # Same commit discipline as the BM25 index: per-batch entry dirs,
 # content-derived batch keys, one atomic manifest replace — appends
-# are crash-safe and replay-idempotent (_bm25_manifest/_bm25_commit
-# are root-generic and reused verbatim).
+# are crash-safe and replay-idempotent (plans/manifest.py).
 
 
 def semantic_cache_put(
@@ -614,7 +597,7 @@ def semantic_cache_put(
     committed-state no-op. Distinct batches must carry disjoint
     cache_ids (same contract as BM25 postings)."""
     root = os.path.join(warehouse, "semcache")
-    manifest = _bm25_manifest(root) or {"batches": []}
+    manifest = read_manifest(root) or {"batches": []}
     sig = entries.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("cache_id")).alias("h"),
@@ -625,13 +608,13 @@ def semantic_cache_put(
     entries.write.mode("overwrite").parquet(
         os.path.join(root, "entries", key)
     )
-    _bm25_commit(root, {"batches": manifest["batches"] + [key]})
+    commit_manifest(root, {"batches": manifest["batches"] + [key]})
 
 
 def semantic_cache_entries(spark: SparkSession, warehouse: str) -> DataFrame:
     """Manifest-resolved live cache (empty frame if never written)."""
     root = os.path.join(warehouse, "semcache")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     schema = (
         "cache_id long, q_vec array<double>, result_id long, "
         "result_sim double"
@@ -932,7 +915,7 @@ def purge_from_indexes(
 
     # ---- BM25 ----
     root = os.path.join(warehouse, "bm25")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     if manifest is None:
         raise ValueError(f"purge_from_indexes: no BM25 index at {root}")
     new_batches: list[str] = []
@@ -996,7 +979,7 @@ def purge_from_indexes(
             ],
             "n_docs long, sum_dl long",
         ).write.mode("overwrite").parquet(os.path.join(root, "stats", stats_key))
-        _bm25_commit(
+        commit_manifest(
             root, {"batches": new_batches, "df": df_key, "stats": stats_key}
         )
         n_chunks_removed = bm25_removed
@@ -1096,7 +1079,7 @@ def purge_from_semantic_cache(
     Scale: cost proportional to the batches actually holding hits —
     and the cache is small by design."""
     root = os.path.join(warehouse, "semcache")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     if manifest is None:
         return 0
     ids = sorted({int(v) for v in result_ids})
@@ -1118,7 +1101,7 @@ def purge_from_semantic_cache(
         ).parquet(os.path.join(root, "entries", new_key))
         new_batches.append(new_key)
     if removed:
-        _bm25_commit(root, {"batches": new_batches})
+        commit_manifest(root, {"batches": new_batches})
     return removed
 
 
@@ -1321,7 +1304,7 @@ def compact_bm25_index(spark: SparkSession, warehouse: str) -> int:
     from O(batches) to 1, which is what keeps per-query planning cost
     flat over an unbounded ingest history."""
     root = os.path.join(warehouse, "bm25")
-    manifest = _bm25_manifest(root)
+    manifest = read_manifest(root)
     if manifest is None:
         raise ValueError(f"compact_bm25_index: no index at {root}")
     if len(manifest["batches"]) <= 1:
@@ -1333,7 +1316,7 @@ def compact_bm25_index(spark: SparkSession, warehouse: str) -> int:
     tf.write.mode("overwrite").parquet(os.path.join(root, "tf", key))
     dl.write.mode("overwrite").parquet(os.path.join(root, "dl", key))
     n = len(manifest["batches"])
-    _bm25_commit(
+    commit_manifest(
         root,
         {"batches": [key], "df": manifest["df"], "stats": manifest["stats"]},
     )

@@ -394,13 +394,14 @@ def q_training_pipeline(spark, sf_dir):
         corpus_warehouse,
     )
     from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_tables,
         ensure_dedup_index,
     )
 
-    wh = _os.path.join(corpus_warehouse(spark, sf_dir), "tdp_v1")
-    ensure_dedup_index(spark, clean, wh)
-    fp, clusters = dedup_tables(spark, wh)
+    fp, clusters = ensure_dedup_index(
+        spark,
+        clean,
+        lambda: _os.path.join(corpus_warehouse(spark, sf_dir), "tdp_v1"),
+    )
     quality = fp.select("doc_id", "quality_score")
     surv = pin_eager(
         cluster_survivors(clusters, quality).select(
@@ -454,7 +455,6 @@ def q_training_pipeline_dsir(spark, sf_dir):
         ensure_token_index,
     )
     from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_tables,
         ensure_dedup_index,
     )
 
@@ -516,9 +516,11 @@ def q_training_pipeline_dsir(spark, sf_dir):
         )
     )
 
-    wh = _os.path.join(corpus_warehouse(spark, sf_dir), "tdp_dsir_v1")
-    ensure_dedup_index(spark, selected, wh)
-    fp, clusters = dedup_tables(spark, wh)
+    fp, clusters = ensure_dedup_index(
+        spark,
+        selected,
+        lambda: _os.path.join(corpus_warehouse(spark, sf_dir), "tdp_dsir_v1"),
+    )
     quality = fp.select("doc_id", "quality_score")
     surv = pin_eager(
         cluster_survivors(clusters, quality).select(

@@ -183,12 +183,8 @@ def q_cluster_size_histogram(spark, sf_dir):
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_tables,
-    )
 
-    wh = dedup_index_for(spark, sf_dir)
-    _, clusters = dedup_tables(spark, wh)
+    _, clusters = dedup_index_for(spark, sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("sz")
     )
@@ -253,18 +249,18 @@ def q_dedup_token_savings(spark, sf_dir):
     from commercial_rfp_data_pipeline_spark.operators.textops import (
         token_count,
     )
+    from commercial_rfp_data_pipeline_spark.operators.dedup import (
+        cluster_survivors,
+    )
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_survivors_from_index,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    wh = dedup_index_for(spark, sf_dir)
-    surv = dedup_survivors_from_index(spark, wh).select(
-        "doc_id", F.lit(1).alias("_s")
-    )
+    fp, clusters = dedup_index_for(spark, sf_dir)
+    surv = cluster_survivors(
+        clusters, fp.select("doc_id", "quality_score")
+    ).select("doc_id", F.lit(1).alias("_s"))
     tk = docs.select(
         "doc_id", "source", token_count("text").alias("n_tokens")
     )
@@ -354,20 +350,18 @@ def q_shard_cluster_colocation(spark, sf_dir):
     from commercial_rfp_data_pipeline_spark.operators.textops import (
         token_count,
     )
+    from commercial_rfp_data_pipeline_spark.operators.dedup import (
+        cluster_survivors,
+    )
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_survivors_from_index,
-        dedup_tables,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    wh = dedup_index_for(spark, sf_dir)
-    _, clusters = dedup_tables(spark, wh)
-    surv = dedup_survivors_from_index(spark, wh).select(
-        "cluster_id", F.col("doc_id").alias("surv_doc")
-    )
+    fp, clusters = dedup_index_for(spark, sf_dir)
+    surv = cluster_survivors(
+        clusters, fp.select("doc_id", "quality_score")
+    ).select("cluster_id", F.col("doc_id").alias("surv_doc"))
     tk = docs.select("doc_id", token_count("text").alias("n_tokens"))
     ctoks = (
         clusters.join(tk, "doc_id")

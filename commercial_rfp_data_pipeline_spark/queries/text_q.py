@@ -481,12 +481,9 @@ def q_dup_clusters(spark, sf_dir):
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_clusters_table,
-    )
 
-    wh = dedup_index_for(spark, sf_dir)
-    return dedup_clusters_table(spark, wh).select("doc_id", "cluster_id")
+    _, clusters = dedup_index_for(spark, sf_dir)
+    return clusters.select("doc_id", "cluster_id")
 
 
 # quality_score fragment shared with text_quality_features — the
@@ -558,15 +555,15 @@ def q_dedup_survivors(spark, sf_dir):
     fresh chain itself stays exercised by simhash_neardup_pairs and by
     the index's own ensure/append tests (dedup_connected_components
     serves from the index too as of round 10)."""
+    from commercial_rfp_data_pipeline_spark.operators.dedup import (
+        cluster_survivors,
+    )
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_survivors_from_index,
-    )
 
-    wh = dedup_index_for(spark, sf_dir)
-    return dedup_survivors_from_index(spark, wh)
+    fp, clusters = dedup_index_for(spark, sf_dir)
+    return cluster_survivors(clusters, fp.select("doc_id", "quality_score"))
 
 
 @query(
@@ -3092,13 +3089,9 @@ def q_preference_pairs(spark, sf_dir):
     from commercial_rfp_data_pipeline_spark.plans.artifacts import (
         dedup_index_for,
     )
-    from commercial_rfp_data_pipeline_spark.plans.dedup_index import (
-        dedup_tables,
-    )
     from pyspark.sql import Window as W
 
-    wh = dedup_index_for(spark, sf_dir)
-    fp, clusters = dedup_tables(spark, wh)
+    fp, clusters = dedup_index_for(spark, sf_dir)
     quality = fp.select("doc_id", "quality_score")
     member = clusters.join(quality, "doc_id").withColumn(
         "_n", F.count(F.lit(1)).over(W.partitionBy("cluster_id"))

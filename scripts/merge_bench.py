@@ -33,11 +33,11 @@ def main() -> int:
         "--inline",
         default=None,
         help=(
-            "bench artifact produced with SPARK_GRAFT_ARTIFACTS=off: "
-            "its per-query times are attached as the queries_inline "
-            "column (VERDICT r10 #1 — warm AND inline numbers for "
-            "every artifact-served query), never merged into the warm "
-            "timings"
+            "bench artifact produced with SPARK_GRAFT_ARTIFACTS=off "
+            "(the base and retries run warm): its per-query times are "
+            "attached as the queries_inline column, so every "
+            "artifact-served query has a warm AND an inline number; "
+            "never merged into the warm timings"
         ),
     )
     args = ap.parse_args()
@@ -94,7 +94,9 @@ def main() -> int:
         if inline.get("artifacts_mode") != "off":
             raise SystemExit(
                 f"{args.inline}: artifacts_mode is "
-                f"{inline.get('artifacts_mode')!r}, need 'off'"
+                f"{inline.get('artifacts_mode')!r}, need 'off' "
+                "(SPARK_GRAFT_ARTIFACTS=warm|off; --inline takes the "
+                "off run)"
             )
         if inline.get("sf") != base.get("sf"):
             raise SystemExit(

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Forced-distributed scale certification (round 11, VERDICT r10 #2).
+"""Forced-distributed scale certification.
 
 The r10 certified bench stopped exercising distributed execution:
 artifact serving + driver-side kernels left sf0.1 numbers dominated by
@@ -7,7 +7,8 @@ job overhead (full registry 8c/32c ratio 1.08). This script produces
 the evidence the 100 TB claim needs: the top inline cost centers run
 with EVERY shortcut disabled —
 
-- ``SPARK_GRAFT_ARTIFACTS=off``   (derive inline; no warehouse reads)
+- ``SPARK_GRAFT_ARTIFACTS=off``   (derive inline; no warehouse reads
+  or writes — the other mode, ``warm``, serves the warehouse)
 - every ``SPARK_GRAFT_*_LOCAL_*`` kernel gate = 0 (distributed loops)
 - ``SPARK_GRAFT_LI_ARROW`` stays ON (it IS the distributed path)
 
@@ -91,7 +92,11 @@ def run_cell(sf_dir: str, cpus: int, queries: list[str], tag: str) -> dict:
             "SPARK_GRAFT_BENCH_JSON": out_json,
         }
     )
-    print(f"scale_cert: cell {tag} ({sf_dir}, {cpus} cores)...", flush=True)
+    print(
+        f"scale_cert: cell {tag} ({sf_dir}, {cpus} cores, "
+        f"SPARK_GRAFT_ARTIFACTS={FORCED_ENV['SPARK_GRAFT_ARTIFACTS']})...",
+        flush=True,
+    )
     subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         env=env,
@@ -104,7 +109,10 @@ def run_cell(sf_dir: str, cpus: int, queries: list[str], tag: str) -> dict:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
     ap.add_argument("--queries", default=",".join(DEFAULT_QUERIES))
     ap.add_argument("--cores", default="8,32")
     ap.add_argument(

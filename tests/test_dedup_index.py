@@ -138,14 +138,14 @@ def test_dedup_index_crash_before_commit_repairs(spark, sf_dir, tmp_path, monkey
     manifest_path = os.path.join(wh, "dedup", "MANIFEST.json")
     m0 = json.load(open(manifest_path))
 
-    real_commit = di._commit
+    real_commit = di.commit_manifest
     calls = {"n": 0}
 
     def boom(root, manifest):
         calls["n"] += 1
         raise RuntimeError("injected crash before manifest commit")
 
-    monkeypatch.setattr(di, "_commit", boom)
+    monkeypatch.setattr(di, "commit_manifest", boom)
     with pytest.raises(RuntimeError):
         append_to_dedup_index(spark, wh, second)
     assert calls["n"] == 1
@@ -154,7 +154,7 @@ def test_dedup_index_crash_before_commit_repairs(spark, sf_dir, tmp_path, monkey
     fp, cl = dedup_tables(spark, wh)
     assert fp.count() == first.count()
 
-    monkeypatch.setattr(di, "_commit", real_commit)
+    monkeypatch.setattr(di, "commit_manifest", real_commit)
     res = append_to_dedup_index(spark, wh, second)
     assert res["replayed"] is False
     _, cl2 = dedup_tables(spark, wh)
